@@ -11,8 +11,8 @@ Reference semantics:
 Spark-first design: the allow/skip sets fold into single alternations
 evaluated by ``rlike`` — one codegen'd regex pass per set, the RegexSet
 analog, no Python in the plan. Normalization (the only genuinely
-non-relational step) runs in an Arrow-batched pandas UDF. Dedup is a
-hash aggregate on ``url_hash`` (partial + final, spillable), which at
+non-relational step) runs in ONE Arrow-batched pandas UDF pass. Dedup
+is a hash aggregate on ``url_hash`` (partial + final, spillable), which at
 10^10 rows shuffles 8-byte keys instead of full URLs.
 """
 
@@ -22,7 +22,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from netrunner_spark.lens import LensConfig
-from netrunner_spark.urlnorm import host_udf, normalize_url_udf, url_hash_col
+from netrunner_spark.urlnorm import normalize_host_udf, url_hash_col
 
 
 def admission_filter(df: DataFrame, lens: LensConfig, url_col: str = "url") -> DataFrame:
@@ -44,11 +44,14 @@ def sanitize(df: DataFrame, lens: LensConfig, url_col: str = "url") -> DataFrame
 
 def normalize_frontier(df: DataFrame, url_col: str = "url") -> DataFrame:
     """RFC-3986 normalize + drop unparsable (F4/F5), attach host and
-    url_hash — the canonical frontier projection."""
+    url_hash — the canonical frontier projection. ONE Python node: the
+    URL and its host come out of the same pandas UDF call."""
     return (
-        df.withColumn(url_col, normalize_url_udf(F.col(url_col)))
-        .filter(F.col(url_col).isNotNull())
-        .withColumn("host", host_udf(F.col(url_col)))
+        df.withColumn("_norm", normalize_host_udf(F.col(url_col)))
+        .filter(F.col("_norm.url").isNotNull())
+        .withColumn(url_col, F.col("_norm.url"))
+        .withColumn("host", F.col("_norm.host"))
+        .drop("_norm")
         .withColumn("url_hash", url_hash_col(url_col))
     )
 

@@ -22,6 +22,8 @@ numpy, vectorized over each Arrow batch.
 
 from __future__ import annotations
 
+from contextlib import contextmanager
+
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
@@ -258,6 +260,16 @@ def bloom_partition(candidates: DataFrame, shards: DataFrame, n_shards: int) -> 
     )
 
 
+def _unseen_of_probed(tagged: DataFrame, seen_keys: DataFrame) -> DataFrame:
+    """Split a ``bloom_partition`` output: definitely-unseen rows bypass
+    the exact anti-join, maybe-seen rows go through it. Both branches
+    read ``tagged``."""
+    fresh = tagged.filter(~F.col("maybe_seen")).drop("maybe_seen")
+    maybe = tagged.filter(F.col("maybe_seen")).drop("maybe_seen")
+    checked = maybe.join(seen_keys, "url_hash", "left_anti")
+    return fresh.unionByName(checked)
+
+
 def unseen_only(
     candidates: DataFrame,
     seen_keys: DataFrame,
@@ -267,11 +279,34 @@ def unseen_only(
     """The full F7 pipeline: bloom pre-filter + exact anti-join backstop.
 
     ``seen_keys``: DataFrame with column url_hash (the cache keys).
+
+    Lazy: both branches of the split re-run the probe and everything
+    upstream of it. ``unseen_once`` runs them once.
     """
     if shards is None:
         return candidates.join(seen_keys, "url_hash", "left_anti")
-    tagged = bloom_partition(candidates, shards, n_shards)
-    fresh = tagged.filter(~F.col("maybe_seen")).drop("maybe_seen")
-    maybe = tagged.filter(F.col("maybe_seen")).drop("maybe_seen")
-    checked = maybe.join(seen_keys, "url_hash", "left_anti")
-    return fresh.unionByName(checked)
+    return _unseen_of_probed(bloom_partition(candidates, shards, n_shards), seen_keys)
+
+
+@contextmanager
+def unseen_once(
+    candidates: DataFrame,
+    seen_keys: DataFrame,
+    shards: DataFrame | None,
+    n_shards: int,
+):
+    """``unseen_only`` with the cogroup probe run ONCE: its output is
+    persisted and materialized (one job, which also runs everything
+    upstream of the probe exactly once), and both branches read it.
+    The persisted O(candidates) rows are released on exit, so
+    materialize what is needed from the yielded frame inside the
+    ``with`` block."""
+    if shards is None:
+        yield unseen_only(candidates, seen_keys, None, n_shards)
+        return
+    tagged = bloom_partition(candidates, shards, n_shards).persist()
+    try:
+        tagged.count()
+        yield _unseen_of_probed(tagged, seen_keys)
+    finally:
+        tagged.unpersist()

@@ -2,8 +2,9 @@
 
 The parse is THE heavy per-row transform (X2); it runs batch-wise via
 ``pandas_udf`` returning a struct column — one Python worker call per
-Arrow batch, never per-row Python in the plan. Downstream consumers
-explode ``links`` to feed the next frontier round (§2.9 UDTF-like).
+Arrow batch, never per-row Python in the plan. Link expansion uses
+``parse_links`` instead: one ``mapInPandas`` pass that emits the next
+frontier rows ``(link, depth + 1)`` directly (§2.9 UDTF-like).
 """
 
 from __future__ import annotations
@@ -121,3 +122,42 @@ def parse_pages(
         F.col("parsed.meta").alias("meta"),
         F.col("parsed.links").alias("links"),
     )
+
+
+LINK_SCHEMA = "url string, depth int"
+
+
+def _links_of(batches):
+    for pdf in batches:
+        urls: list[str] = []
+        depths: list[int] = []
+        for url, doc, depth in zip(pdf["url"], pdf["content"], pdf["depth"]):
+            if not isinstance(doc, str) or not isinstance(url, str):
+                continue
+            try:
+                links = sorted(html_to_text(url, doc).links)
+            except RecursionError:
+                # same degradation as _parse_batch: a pathologically
+                # nested page contributes no links, the batch survives
+                continue
+            urls.extend(links)
+            depths.extend([int(depth) + 1] * len(links))
+        yield pd.DataFrame(
+            {
+                "url": pd.Series(urls, dtype=object),
+                "depth": pd.Series(depths, dtype="int32"),
+            }
+        )
+
+
+def parse_links(pages: DataFrame) -> DataFrame:
+    """pages(url, content, depth) → one ``(url, depth)`` row per out-link,
+    ``url`` the resolved link and ``depth`` the page's depth + 1.
+
+    ONE Python pass per page and no join back to the pages: the depth
+    rides through the same ``mapInPandas`` batch as the content. The
+    operator is opaque to the optimizer, so no filter on its output can
+    be pushed below it into a second evaluation, as happens to a
+    deterministic UDF column. Links are ``html_to_text``'s, sorted; only
+    2xx pages should be fed here (caller's F6 filter)."""
+    return pages.select("url", "content", "depth").mapInPandas(_links_of, LINK_SCHEMA)

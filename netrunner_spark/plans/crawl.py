@@ -22,6 +22,13 @@ budget per round. Round 2 moves the scheduling itself out of the loop:
     mod.rs:221-241) — it only changes when link expansion enqueues new
     URLs, so the per-round "bloom checkpoint" is the unchanged
     committed snapshot, not a rewrite.
+  * link expansion (``follow_links``) runs each of its 3 Python passes
+    ONCE per round: parse (pages → (link, depth+1) rows in one
+    ``mapInPandas`` pass, no join back to the pages), normalize + host
+    (one UDF) and the bloom probe (materialized once for both
+    seen-guard branches). A round with no 2xx page below ``max_depth``
+    skips expansion outright: the count rides the cache write's
+    ``observe``, so no job runs after the write.
   * the terminal ``frontier`` snapshot (url, state, round) is an O(N)
     MATERIALIZATION at drain end / on demand — per-round frontier state
     is fully determined by (schedule, committed cache slices), which is
@@ -56,8 +63,8 @@ from netrunner_spark.operators.politeness import (
     schedule_rounds,
     with_priority,
 )
-from netrunner_spark.operators.seen import unseen_only, upsert_shards
-from netrunner_spark.parser.udf import parse_pages
+from netrunner_spark.operators.seen import unseen_once, upsert_shards
+from netrunner_spark.parser.udf import parse_links, parse_pages
 from netrunner_spark.tables import LakeCatalog
 
 FRONTIER_COLS = ["url", "url_hash", "host", "depth", "priority", "state", "round"]
@@ -415,7 +422,11 @@ class CrawlJob:
         per-slice ``_SUCCESS`` marker ``write_slice``'s committer
         emits, written AFTER the data commit — the crash window
         (data committed, marker missing ⇒ slice replayed) is unchanged.
-        Column-pruned: content is never read."""
+        A round with no cache rows gets no partition from the write; it
+        gets an empty (schema-only) slice instead, so its stamp never
+        sits in a marker-only directory that reads as committed yet
+        fails ``read_slice``, and it is not found missing again on the
+        next backfill. Column-pruned: content is never read."""
         cache = self.cat.read_slices("cache")
         agg = (
             cache.filter(F.col("fetched_round").isin(rounds))
@@ -424,6 +435,9 @@ class CrawlJob:
             .withColumnRenamed("fetched_round", "round")
         )
         self.cat.append_partitions(agg, "metrics", "round")
+        for r in rounds:
+            if not self.cat.slice_exists("metrics", "round", r):
+                self.cat.write_slice(agg.limit(0), "metrics", "round", r)
         self.cat.mark_slices_committed("metrics", "round", rounds)
 
     def _backfill_metrics(self) -> None:
@@ -499,11 +513,17 @@ class CrawlJob:
                 fetched, self.images, prefer_broadcast=small, refs=refs
             )
         obs = Observation()
-        fetched = fetched.observe(obs, F.count(F.lit(1)).alias("n"))
+        aggs = [F.count(F.lit(1)).alias("n")]
+        if self.cfg.follow_links:
+            # pages link expansion would parse, counted on the same
+            # write: 0 ⇒ the round has nothing to expand (no extra job)
+            aggs.append(F.count(F.when(self._expandable(), 1)).alias("n_expand"))
+        fetched = fetched.observe(obs, *aggs)
         # no fetched_round literal: write_slice drops the slice column
         # anyway — it exists only as the partition directory name
         self.cat.write_slice(fetched, "cache", "fetched_round", round_no)
-        n_batch = int(obs.get["n"])
+        got = obs.get
+        n_batch = int(got["n"])
 
         # 2. per-host lineage/metrics: deferred to ONE bulk pass at the
         #    end of run() (r6 optimization — the per-round read-back +
@@ -514,9 +534,11 @@ class CrawlJob:
         # 3. link expansion (our scalability extension; the reference
         #    drains a fixed queue) appends NEW schedule partitions and
         #    folds the new keys into the bloom — O(new links), never
-        #    O(frontier).
+        #    O(frontier). A round with no 2xx page below max_depth (e.g.
+        #    the last round of a crawl, all misses) skips it: no job.
         if self.cfg.follow_links:
-            self._expand_links(round_no)
+            if got["n_expand"]:
+                self._expand_links(round_no)
             self.cat.set_marker("schedule_ext", f"expanded-{round_no}")
         return n_batch
 
@@ -539,6 +561,12 @@ class CrawlJob:
                 self._expand_links(r)
                 self.cat.set_marker("schedule_ext", f"expanded-{r}")
 
+    def _expandable(self):
+        """Cache rows whose out-links get expanded: 2xx below max_depth."""
+        return F.col("status").between(200, 299) & (
+            F.col("depth") < self.cfg.max_depth
+        )
+
     def _expand_links(self, round_no: int) -> None:
         """Parse this round's 2xx pages, admit + normalize links,
         robots-check, then the F7 seen guard (bloom pre-filter + exact
@@ -551,13 +579,7 @@ class CrawlJob:
         parser/mod.rs:24.)
         """
         slice_df = self.cat.read_slice("cache", "fetched_round", round_no)
-        ok = slice_df.filter(
-            F.col("status").between(200, 299) & (F.col("depth") < self.cfg.max_depth)
-        )
-        parsed = parse_pages(ok.select("url", "content"))
-        links = parsed.join(ok.select("url", "depth"), "url").select(
-            F.explode("links").alias("url"), (F.col("depth") + 1).alias("depth")
-        )
+        links = parse_links(slice_df.filter(self._expandable()))
         if self.lens is not None:
             links = admission_filter(sanitize(links, self.lens), self.lens)
         links = dedup_frontier(normalize_frontier(links))
@@ -590,21 +612,22 @@ class CrawlJob:
             seen_keys = seen_keys.unionByName(ext.select("url_hash"))
         # blocked keys are NOT in the bloom; robots_allowed above already
         # re-filters them, so they can't re-enter via this path
-        fresh = unseen_only(links, seen_keys, shards, n_sh)
-
         base_round = self.max_round() + 1
-        newly = (
-            schedule_rounds(
-                with_priority(fresh),
-                self.budgets(),
-                default_budget=self._default_budget(),
-                round_offset=base_round,
-                n_salts=self.cfg.schedule_salts,
+        obs = Observation()
+        with unseen_once(links, seen_keys, shards, n_sh) as fresh:
+            newly = (
+                schedule_rounds(
+                    with_priority(fresh),
+                    self.budgets(),
+                    default_budget=self._default_budget(),
+                    round_offset=base_round,
+                    n_salts=self.cfg.schedule_salts,
+                )
+                .select(*SCHEDULE_COLS)
+                .observe(obs, F.count(F.lit(1)).alias("n"))
+                .localCheckpoint(eager=True)
             )
-            .select(*SCHEDULE_COLS)
-            .localCheckpoint(eager=True)
-        )
-        if not newly.take(1):
+        if not obs.get["n"]:
             return
         # fold the bloom BEFORE appending the schedule partitions: a
         # crash between the two then leaves keys in the bloom that are

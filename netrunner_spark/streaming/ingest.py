@@ -2,10 +2,11 @@
 (discovery emits files / a queue), are normalized + admitted + deduped
 with a watermark, and appended to the frontier staging area.
 
-readStream → normalize pandas UDF → admission rlike → watermark +
-dropDuplicatesWithinWatermark(url_hash) → writeStream (append). State is bounded by
-the watermark: a URL seen twice within the horizon dedups in-stream;
-cross-horizon dedup is the batch seen-set's job (operators.seen).
+readStream → normalize + host (one pandas UDF pass) → admission rlike →
+watermark + dropDuplicatesWithinWatermark(url_hash) → writeStream
+(append). State is bounded by the watermark: a URL seen twice within
+the horizon dedups in-stream; cross-horizon dedup is the batch seen-set's
+job (operators.seen).
 
 windowed_host_rates: per-host tumbling-window arrival counts — the
 streaming twin of the per-round metrics table (A1-analog), with
@@ -19,7 +20,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from netrunner_spark.lens import LensConfig
-from netrunner_spark.urlnorm import host_udf, normalize_url_udf
+from netrunner_spark.operators.admission import admission_filter, normalize_frontier
 
 CANDIDATE_SCHEMA = T.StructType(
     [
@@ -45,16 +46,11 @@ def ingest_stream(
 ) -> DataFrame:
     """candidate stream → admitted, normalized, in-horizon-deduped
     frontier rows (url, url_hash, host, depth, discovered_at)."""
-    df = candidates.withColumn("url", normalize_url_udf(F.col("url"))).filter(
-        F.col("url").isNotNull()
-    )
+    df = normalize_frontier(candidates)
     if lens is not None:
-        allow, skip = lens.alternations()
-        df = df.filter(F.col("url").rlike(allow) & ~F.col("url").rlike(skip))
+        df = admission_filter(df, lens)
     df = (
-        df.withColumn("host", host_udf(F.col("url")))
-        .withColumn("url_hash", F.xxhash64("url"))
-        .withWatermark("discovered_at", watermark)
+        df.withWatermark("discovered_at", watermark)
         # dropDuplicatesWithinWatermark, NOT dropDuplicates: plain
         # dropDuplicates only evicts state when the event-time column
         # is part of the keys, so keying on url_hash alone would grow
@@ -209,16 +205,11 @@ def run_quota_once(
     # second stateful operator behind applyInPandasWithState is not
     # supported, and cross-batch dedup is the batch seen-set's job.
     cands = read_candidates(spark, input_dir)
-    df = (
-        cands.withColumn("url", normalize_url_udf(F.col("url")))
-        .filter(F.col("url").isNotNull())
-        .withColumn("host", host_udf(F.col("url")))
-        .withColumn("url_hash", F.xxhash64("url"))
-        .select("url", "url_hash", "host", "depth", "discovered_at")
+    df = normalize_frontier(cands).select(
+        "url", "url_hash", "host", "depth", "discovered_at"
     )
     if lens is not None:
-        allow, skip = lens.alternations()
-        df = df.filter(F.col("url").rlike(allow) & ~F.col("url").rlike(skip))
+        df = admission_filter(df, lens)
     out = stateful_host_quota(df, rps=rps, burst=burst)
     q = (
         out.writeStream.format("parquet")
@@ -345,10 +336,7 @@ def handoff_admitted(
         )
     admitted = df.filter(F.col("admitted"))
     if lens is not None:
-        allow, skip = lens.alternations()
-        admitted = admitted.filter(
-            F.col("url").rlike(allow) & ~F.col("url").rlike(skip)
-        )
+        admitted = admission_filter(admitted, lens)
     links = admitted.select(
         "url", "url_hash", "host", F.coalesce(F.col("depth"), F.lit(0)).alias("depth")
     ).dropDuplicates(["url_hash"])

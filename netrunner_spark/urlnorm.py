@@ -160,13 +160,29 @@ def host_of(url: str | None) -> str | None:
 # ---------------------------------------------------------------- pandas UDFs
 
 @pandas_udf(T.StringType())
-def normalize_url_udf(urls: pd.Series) -> pd.Series:
-    return urls.map(lambda u: rfc3986_normalize(u) if isinstance(u, str) else None)
-
-
-@pandas_udf(T.StringType())
 def host_udf(urls: pd.Series) -> pd.Series:
     return urls.map(lambda u: host_of(u) if isinstance(u, str) else None)
+
+
+NORM_HOST_TYPE = T.StructType(
+    [T.StructField("url", T.StringType()), T.StructField("host", T.StringType())]
+)
+
+
+def _normalize_with_host(urls: pd.Series) -> pd.DataFrame:
+    norm = urls.map(lambda u: rfc3986_normalize(u) if isinstance(u, str) else None)
+    return pd.DataFrame(
+        {"url": norm, "host": norm.map(lambda u: None if u is None else host_of(u))}
+    )
+
+
+# (normalized url, its host) in ONE Python pass. Marked nondeterministic
+# for the optimizer's sake only: a deterministic UDF lets Catalyst push
+# a filter on its output (``url IS NOT NULL``) below the projection that
+# computes it, which evaluates the UDF a second time in the filter.
+normalize_host_udf = pandas_udf(
+    _normalize_with_host, NORM_HOST_TYPE
+).asNondeterministic()
 
 
 @pandas_udf(T.StringType())

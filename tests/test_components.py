@@ -178,6 +178,31 @@ class TestBloom:
         }
         assert got == want  # bloom FPs never corrupt the exact result
 
+    def test_unseen_once_releases_its_probe(self, spark):
+        """``unseen_once`` gives ``unseen_only``'s rows from ONE held
+        probe, and drops the held rows when its block exits."""
+        from netrunner_spark.operators.seen import (
+            build_shards,
+            merge_shards,
+            unseen_once,
+            unseen_only,
+        )
+
+        seen = spark.range(0, 500).select(F.xxhash64("id").alias("url_hash"))
+        cand = spark.range(400, 700).select(F.xxhash64("id").alias("url_hash"))
+        shards = merge_shards(None, build_shards(seen, 4))
+        def held():
+            return spark.sparkContext._jsc.getPersistentRDDs().size()
+
+        before = held()
+        with unseen_once(cand, seen, shards, 4) as out:
+            assert held() == before + 1
+            got = sorted(r["url_hash"] for r in out.collect())
+        assert held() == before
+        assert got == sorted(
+            r["url_hash"] for r in unseen_only(cand, seen, shards, 4).collect()
+        )
+
     def test_upsert_into_existing_shards_has_no_false_negatives(self, spark):
         """Regression (r4): upserting keys into NON-empty shards used to
         garble them — the union with old shard rows made url_hash a

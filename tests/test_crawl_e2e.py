@@ -282,6 +282,101 @@ def test_expansion_backfill_heals_crash(spark, world, tmp_path_factory):
     assert len(b) > seeds_df.count()  # expansion genuinely recovered
 
 
+def test_round_without_expandable_pages_skips_expansion(
+    spark, world, tmp_path_factory, monkeypatch
+):
+    """With max_depth=1 only round 0 (the seeds, depth 0) has pages to
+    expand; every later round holds depth-1 pages only. Such a round
+    must run NO Spark job after its cache write — the count of
+    expandable rows rides the write's Observation — yet still set its
+    ``expanded-N`` marker so resume never replays it. The expanding
+    round 0, measured the same way, does run jobs."""
+    cat = LakeCatalog(spark, str(tmp_path_factory.mktemp("lake_skip")))
+    cfg = CrawlConfig(
+        round_seconds=10.0, max_rounds=30, n_bloom_shards=8,
+        follow_links=True, max_depth=1,
+    )
+    job = CrawlJob(
+        spark, cat, MockFetcher(world["web"]), world["robots"], cfg,
+        lens=world["lens"],
+    )
+    job.init_frontier(
+        world["web"].filter(F.col("url").endswith("/docs/0")).select(
+            "url", "host", F.xxhash64("url").alias("url_hash")
+        )
+    )
+    sc = spark.sparkContext
+    write_slice = cat.write_slice
+
+    def tagged_write(df, table, slice_col, slice_val):
+        write_slice(df, table, slice_col, slice_val)
+        if table == "cache":
+            sc.setJobGroup(f"after-cache-{slice_val}", "rest of the round")
+
+    monkeypatch.setattr(cat, "write_slice", tagged_write)
+    jobs_after_cache = {}
+    r = 0
+    while r <= job.max_round():
+        try:
+            job.run_round(r)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        group = sc.statusTracker().getJobIdsForGroup(f"after-cache-{r}")
+        jobs_after_cache[r] = len(group)
+        r += 1
+
+    assert r >= 2  # round 0 expanded into later rounds
+    assert jobs_after_cache[0] > 0
+    for late in range(1, r):
+        assert jobs_after_cache[late] == 0, late
+        assert cat.has_marker("schedule_ext", f"expanded-{late}")
+    # nothing to replay on resume: the skipped rounds count as expanded
+    sc.setJobGroup("backfill", "expansion backfill")
+    try:
+        job._backfill_expansion()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert sc.statusTracker().getJobIdsForGroup("backfill") == []
+
+
+def test_metrics_bulk_gives_empty_rounds_an_empty_slice(spark, world, tmp_path_factory):
+    """A committed cache round that aggregates to no metrics rows gets
+    no partition from the bulk write; stamping ``_SUCCESS`` on it would
+    leave a marker-only directory that reads as committed but fails
+    ``read_slice``. Such a round gets an empty slice instead, which
+    reads back and counts as done: a second backfill runs no job."""
+    cat = LakeCatalog(spark, str(tmp_path_factory.mktemp("lake_metrics")))
+    job = CrawlJob(
+        spark, cat, MockFetcher(world["web"]), world["robots"],
+        CrawlConfig(round_seconds=10.0, n_bloom_shards=8),
+    )
+    job.init_frontier(
+        world["web"].select("url", "host", F.xxhash64("url").alias("url_hash"))
+    )
+    job.run_round(0)
+    empty = cat.read_slice("cache", "fetched_round", 0).limit(0)
+    cat.write_slice(empty, "cache", "fetched_round", 1)
+    assert cat.slice_committed("cache", "fetched_round", 1)
+
+    job._write_metrics_bulk([0, 1])
+    assert cat.slice_committed("metrics", "round", 0)
+    assert cat.read_slice("metrics", "round", 0).count() > 0
+    assert cat.slice_exists("metrics", "round", 1)
+    assert cat.slice_committed("metrics", "round", 1)
+    assert cat.read_slice("metrics", "round", 1).count() == 0
+
+    sc = spark.sparkContext
+    sc.setJobGroup("metrics-backfill", "second metrics backfill")
+    try:
+        job._backfill_metrics()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert sc.statusTracker().getJobIdsForGroup("metrics-backfill") == []
+
+
 def test_resume_bit_identity(spark, world, discovered, tmp_path_factory):
     """Kill-resume: running rounds 0..1, then resuming a fresh CrawlJob
     over the same catalog, must converge to the same cache/frontier as

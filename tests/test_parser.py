@@ -126,3 +126,25 @@ def test_deeply_nested_page_degrades_instead_of_crashing(spark):
     assert rows["https://ok.test/"]["content"] == "fine"
     assert rows["https://deep.test/"]["content"] == ""
     assert rows["https://deep.test/"]["links"] == []
+
+
+def test_parse_links_emits_next_depth_rows(spark):
+    """Link expansion's parse: one (link, depth+1) row per out-link of
+    each page, the same links ``html_to_text`` finds; a page too deeply
+    nested to walk contributes no links instead of failing the batch."""
+    from netrunner_spark.parser.udf import parse_links
+
+    page = (
+        "<html><body><a href='/a'>a</a> <a href='https://x.test/b'>b</a>"
+        " <a href='#top'>skip</a> <a rel='nofollow' href='/n'>n</a></body></html>"
+    )
+    deep = "<div>" * 1500 + "<a href='/z'>z</a>" + "</div>" * 1500
+    df = spark.createDataFrame(
+        [("https://s.test/p", page, 1), ("https://deep.test/", deep, 0)],
+        "url string, content string, depth int",
+    )
+    rows = parse_links(df).collect()
+    assert sorted((r["url"], r["depth"]) for r in rows) == [
+        (link, 2) for link in sorted(html_to_text("https://s.test/p", page).links)
+    ]
+    assert sorted(r["url"] for r in rows) == ["https://s.test/a", "https://x.test/b"]

@@ -3,6 +3,8 @@ PLAN properties (broadcast vs shuffle, partition pruning, column
 pruning) — assert them on explain output so a refactor that silently
 reintroduces a shuffle or a full-content scan fails loudly."""
 
+import re
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -18,6 +20,58 @@ def _explain(df, mode: str = "formatted") -> str:
     return sc._jvm.PythonSQLUtils.explainString(  # type: ignore[attr-defined]
         df._jdf.queryExecution(), mode
     )
+
+
+PY_NODES = (
+    "ArrowEvalPython",
+    "BatchEvalPython",
+    "MapInPandas",
+    "FlatMapGroupsInPandas",
+    "FlatMapCoGroupsInPandas",
+)
+
+
+def _seq(scala_seq) -> list:
+    return [scala_seq.apply(i) for i in range(scala_seq.size())]
+
+
+def _ran_python_nodes(spark, description: str) -> list[tuple[str, str, list]]:
+    """(node, python function, ancestor node names) for every Python node
+    that RAN in the SQL executions under the job description
+    ``description``, read from Spark's SQL status store: a node counts
+    once per execution in which it sent data to Python workers. A node
+    inside a cached relation appears in every plan that reads the cache
+    but runs only in the execution that materializes it."""
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    store = spark._jsparkSession.sharedState().statusStore()
+    found = []
+    for e in _seq(store.executionsList()):
+        if e.description() != description:
+            continue
+        values = store.executionMetrics(e.executionId())
+        graph = store.planGraph(e.executionId())
+        nodes = {n.id(): n for n in _seq(graph.allNodes())}
+        parent = {edge.fromId(): edge.toId() for edge in _seq(graph.edges())}
+        for n in nodes.values():
+            if n.name() not in PY_NODES:
+                continue
+            sent = [
+                values.get(m.accumulatorId())
+                for m in _seq(n.metrics())
+                if m.name() == "data sent to Python workers"
+            ]
+            # "0.0 B", or "total (min, med, max ...)\n3.0 KiB (...)"
+            if not sent[0].isDefined():
+                continue
+            if sent[0].get().splitlines()[-1].startswith("0.0 "):
+                continue
+            ancestors, up = [], parent.get(n.id())
+            while up is not None:
+                ancestors.append(nodes[up].name())
+                up = parent.get(up)
+            fn = re.search(r"(\w+)\(", n.desc()).group(1)
+            found.append((n.name(), fn, ancestors))
+    return found
 
 
 @pytest.fixture(scope="module")
@@ -431,3 +485,66 @@ def test_graph_family_plan_shapes(spark):
     # before the shuffle, which both aggregate impls provide
     assert "SortAggregate" in plan or "HashAggregate" in plan
     assert "partial" in plan.lower()
+
+
+def test_expanding_enqueue_runs_each_python_pass_once(spark, tmp_path_factory):
+    """A round that expands links runs three Python nodes, each once:
+    the link parse, the normalize + host pass and the bloom probe (plus
+    the bloom fold of the write). None may be re-evaluated in a filter
+    pushed below its projection or re-run by the second branch of the
+    seen guard, and the parsed pages are never broadcast back onto the
+    fetched ones."""
+    web = gen_web(spark, 3, 30).cache()
+    cat = LakeCatalog(spark, str(tmp_path_factory.mktemp("plan_lake_expand")))
+    job = CrawlJob(
+        spark, cat, MockFetcher(web), gen_robots(spark, 3),
+        CrawlConfig(n_bloom_shards=8, follow_links=True, max_depth=3),
+    )
+    job.init_frontier(
+        web.filter(F.col("url").endswith("/docs/0")).select(
+            "url", "host", url_hash_col("url").alias("url_hash")
+        )
+    )
+    sc = spark.sparkContext
+    expand = job._expand_links
+
+    def traced_expand(round_no):
+        sc.setJobDescription("plan-shape-expanding-round")
+        try:
+            expand(round_no)
+        finally:
+            sc.setJobDescription(None)
+
+    job._expand_links = traced_expand
+    job.run_round(0)
+    assert job.max_round() > 0  # the round really enqueued new links
+
+    nodes = _ran_python_nodes(spark, "plan-shape-expanding-round")
+    fns = [fn for _, fn, _ in nodes]
+    assert fns.count("_links_of") == 1  # parse
+    assert fns.count("_normalize_with_host") == 1  # normalize + host
+    assert fns.count("probe") == 1  # bloom probe
+    assert fns.count("combine") == 1  # bloom fold (the write)
+    assert len(nodes) == 4
+    for _, fn, ancestors in nodes:
+        if fn == "_links_of":
+            assert "BroadcastExchange" not in ancestors
+
+
+def test_normalize_frontier_is_one_python_node(spark):
+    """normalize + drop unparsable + host is ONE Arrow-UDF node; the
+    not-null filter on its output stays above it instead of being
+    pushed below as a second evaluation."""
+    from netrunner_spark.operators.admission import normalize_frontier
+
+    df = spark.createDataFrame(
+        [("HTTP://A.test:80/x/../y", 1), ("not a url", 2), ("https://b.test", 3)],
+        "url string, depth int",
+    )
+    out = normalize_frontier(df)
+    plan = _explain(out)
+    assert len(re.findall(r"^\(\d+\) ArrowEvalPython", plan, re.M)) == 1
+    assert not any(n in plan for n in PY_NODES if n != "ArrowEvalPython")
+    got = {(r["url"], r["host"], r["depth"]) for r in out.collect()}
+    assert got == {("http://a.test/y", "a.test", 1), ("https://b.test/", "b.test", 3)}
+    assert out.columns == ["url", "depth", "host", "url_hash"]
