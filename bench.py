@@ -223,19 +223,17 @@ def bench_frontier_drain(spark, mode: str = "html") -> dict:
     mode='html': the full reference-crawl scope (12 KB pages, parse +
     canonical dedup + archive).
 
-    The fetch join runs CO-LOCATED by default (store/schedule/images
-    bucketed on url_hash → zero exchanges, zero per-round driver-serial
-    broadcast builds); BENCH_JOIN=broadcast restores the round-2 path
-    for A/B comparison."""
+    The fetch join runs CO-LOCATED (store/schedule/images bucketed on
+    url_hash → zero exchanges, zero per-round driver-serial broadcast
+    builds of big rounds)."""
     from pyspark.sql import functions as F
 
     from netrunner_spark.plans.crawl import CrawlConfig, CrawlJob
-    from netrunner_spark.sources.fetcher import MockFetcher, prepare_colocated_fetcher
+    from netrunner_spark.sources.fetcher import prepare_colocated_fetcher
     from netrunner_spark.synth import gen_images, gen_pair_web, gen_robots, gen_web
     from netrunner_spark.tables import LakeCatalog
     from netrunner_spark.urlnorm import url_hash_col
 
-    colocated = os.environ.get("BENCH_JOIN", "colocated") != "broadcast"
     tmp = tempfile.mkdtemp(prefix="nr_bench_")
     try:
         web_path = os.path.join(tmp, "web")
@@ -266,15 +264,10 @@ def bench_frontier_drain(spark, mode: str = "html") -> dict:
             round_seconds=PAGES / 3.0,
             max_rounds=50,
             n_bloom_shards=CPUS * 2,
-            colocated_buckets=CPUS if colocated else None,
+            colocated_buckets=CPUS,
         )
-        if colocated:
-            fetcher = prepare_colocated_fetcher(cat, web, images, n_buckets=CPUS)
-            job = CrawlJob(spark, cat, fetcher, robots, cfg)
-        else:
-            job = CrawlJob(
-                spark, cat, MockFetcher(web), robots, cfg, images=images
-            )
+        fetcher = prepare_colocated_fetcher(cat, web, images, n_buckets=CPUS)
+        job = CrawlJob(spark, cat, fetcher, robots, cfg)
         job.init_frontier(frontier0)
 
         t0 = time.time()

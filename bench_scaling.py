@@ -85,16 +85,15 @@ def leg(cores: int) -> dict:
 
     from netrunner_spark.plans.crawl import CrawlConfig, CrawlJob
     from netrunner_spark.session import get_spark
-    from netrunner_spark.sources.fetcher import MockFetcher, prepare_colocated_fetcher
+    from netrunner_spark.sources.fetcher import prepare_colocated_fetcher
     from netrunner_spark.synth import gen_images, gen_robots
     from netrunner_spark.tables import LakeCatalog
     from netrunner_spark.urlnorm import url_hash_col
 
-    # SCALE_JOIN=colocated (default): bucketed store/schedule → exchange-
-    # free fetch joins, no per-round driver-serial broadcast build. The
-    # bucket count is FIXED across legs (identical physical input); it
-    # caps the join stage's parallelism, so it must be ≥ the largest leg.
-    colocated = os.environ.get("SCALE_JOIN", "colocated") != "broadcast"
+    # bucketed store/schedule → exchange-free fetch joins, no per-round
+    # driver-serial broadcast build of big rounds. The bucket count is
+    # FIXED across legs (identical physical input); it caps the join
+    # stage's parallelism, so it must be ≥ the largest leg.
     n_buckets = int(os.environ.get("SCALE_BUCKETS", "32"))
 
     repeats = int(os.environ.get("SCALE_REPEATS", "2"))
@@ -145,25 +144,16 @@ def leg(cores: int) -> dict:
                 ),
                 max_rounds=50,
                 n_bloom_shards=64,
-                broadcast_batch_bytes=int(
-                    os.environ.get("SCALE_BCAST_BYTES", str(32 * 1024 * 1024))
-                ),
-                colocated_buckets=n_buckets if colocated else None,
+                colocated_buckets=n_buckets,
             )
-            # images passed to the JOB: per-round batch-wise decode +
-            # validation is part of the caching path (north_star).
-            # Colocated mode instead fuses validation into the fetch
-            # stage against the pre-bucketed images_by_url table (the
-            # one-time layout job runs before t0, like the store write).
-            if colocated:
-                fetcher = prepare_colocated_fetcher(
-                    cat, web, images, n_buckets=n_buckets
-                )
-                job = CrawlJob(spark, cat, fetcher, robots, cfg)
-            else:
-                job = CrawlJob(
-                    spark, cat, MockFetcher(web), robots, cfg, images=images
-                )
+            # per-round batch-wise image decode + validation is part of
+            # the caching path (north_star), fused into the fetch stage
+            # against the pre-bucketed images_by_url table (the one-time
+            # layout job runs before t0, like the store write)
+            fetcher = prepare_colocated_fetcher(
+                cat, web, images, n_buckets=n_buckets
+            )
+            job = CrawlJob(spark, cat, fetcher, robots, cfg)
             t_init = time.time()
             job.init_frontier(frontier0)
             init_schedule_s = round(time.time() - t_init, 3)
@@ -182,7 +172,7 @@ def leg(cores: int) -> dict:
             result = {
                 "cores": cores,
                 "mode": MODE,
-                "join": "colocated" if colocated else "broadcast",
+                "join": "colocated",
                 "round_seconds": cfg.round_seconds,
                 "urls": n,
                 "seconds": round(dt, 3),

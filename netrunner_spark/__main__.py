@@ -136,7 +136,7 @@ def main(argv: list[str] | None = None) -> int:
         from netrunner_spark import lens as lens_mod
         from netrunner_spark.plans.check_urls import check_urls
         from netrunner_spark.plans.crawl import CrawlConfig, CrawlJob
-        from netrunner_spark.sources.fetcher import MockFetcher
+        from netrunner_spark.sources.fetcher import prepare_colocated_fetcher
         from netrunner_spark.synth import gen_cdx, gen_robots, gen_sitemaps, gen_web
         from netrunner_spark.tables import LakeCatalog
 
@@ -147,7 +147,7 @@ def main(argv: list[str] | None = None) -> int:
         job = CrawlJob(
             spark,
             cat,
-            MockFetcher(web),
+            prepare_colocated_fetcher(cat, web),
             robots,
             CrawlConfig(
                 rps=args.rps,

@@ -102,35 +102,12 @@ def shard_id_col(url_hash_col, n_shards: int):
     return F.pmod(url_hash_col, F.lit(n_shards)).cast("int")
 
 
-def build_shards(fetched: DataFrame, n_shards: int) -> DataFrame:
-    """fetched(url_hash) → new shard rows for this round's keys."""
-
-    def build(pdf: pd.DataFrame) -> pd.DataFrame:
-        bits = np.zeros(SHARD_BITS // 8, dtype=np.uint8)
-        h = _hashes_u64(pdf["url_hash"])
-        _set_bits(bits, h)
-        return pd.DataFrame(
-            {
-                "shard_id": [int(pdf["shard_id"].iloc[0])],
-                "bits": [bits.tobytes()],
-                "n_items": [len(pdf)],
-                "bits_set": [int(np.unpackbits(bits).sum())],
-                "n_shards": [n_shards],
-            }
-        )
-
-    keyed = fetched.select(
-        shard_id_col(F.col("url_hash"), n_shards).alias("shard_id"), "url_hash"
-    )
-    return keyed.groupBy("shard_id").applyInPandas(build, SHARD_SCHEMA)
-
-
 def upsert_shards(
     old: DataFrame | None, keys: DataFrame, n_shards: int
 ) -> DataFrame:
     """ONE grouped-pandas pass: OR the new keys' bits into the existing
-    shard bitsets (old=None → fresh shards). Halves the python stages
-    vs build-then-merge; idempotent on replay (re-ORing is a no-op)."""
+    shard bitsets (old=None → fresh shards). The only place shards are
+    built; idempotent on replay (re-ORing is a no-op)."""
     # url_hash crosses the Arrow boundary as a STRING: the union with
     # old shard rows makes the column nullable, and a nullable int64
     # reaches pandas as float64 — the 53-bit mantissa silently garbles
@@ -186,29 +163,6 @@ def upsert_shards(
         )
 
     return rows.groupBy("shard_id").applyInPandas(combine, SHARD_SCHEMA)
-
-
-def merge_shards(old: DataFrame | None, new: DataFrame) -> DataFrame:
-    """OR together shard bitsets across rounds (grouped pandas)."""
-    if old is None:
-        return new
-    both = old.unionByName(new)
-
-    def merge(pdf: pd.DataFrame) -> pd.DataFrame:
-        acc = np.zeros(SHARD_BITS // 8, dtype=np.uint8)
-        for b in pdf["bits"]:
-            acc |= np.frombuffer(b, dtype=np.uint8)
-        return pd.DataFrame(
-            {
-                "shard_id": [int(pdf["shard_id"].iloc[0])],
-                "bits": [acc.tobytes()],
-                "n_items": [int(pdf["n_items"].sum())],
-                "bits_set": [int(np.unpackbits(acc).sum())],
-                "n_shards": [int(pdf["n_shards"].iloc[0])],
-            }
-        )
-
-    return both.groupBy("shard_id").applyInPandas(merge, SHARD_SCHEMA)
 
 
 def bloom_partition(candidates: DataFrame, shards: DataFrame, n_shards: int) -> DataFrame:

@@ -10,13 +10,18 @@ budget per round. Round 2 moves the scheduling itself out of the loop:
     partitioned by ``sched_round`` — provably the same per-round batches
     as re-ranking every round (the within-host order is static), at
     O(N) total instead of O(R·N).
+  * one storage layout: the ``schedule``, the page store and the image
+    payloads are bucketed on ``url_hash`` with one bucket count
+    (``tables.N_BUCKETS`` unless configured; Iceberg
+    ``bucket(N, url_hash)`` on a cluster), so the fetch join never
+    shuffles.
   * each round is then: partition-pruned read of ``sched_round=r`` →
-    fetch join (broadcast below a size cap, shuffle-hash above) →
-    batch-wise image decode/validate (single left join — ONE pass) →
+    exchange-free fetch join over the bucketed store (the batch
+    broadcasts below ``BROADCAST_BATCH_BYTES``, merge-joins co-located
+    above) with the image decode/validate fused into the same stage →
     ONE cache-slice write (with ``observe`` supplying the row count, so
-    no separate count job) → one tiny column-pruned metrics job.
-    That's 2 Spark jobs per round; round 1 needed 5-6 plus an
-    O(frontier) snapshot rewrite.
+    no separate count job). Per-host metrics for all rounds land in one
+    bulk pass at the end of ``run()``.
   * the URL-seen bloom covers every SCHEDULED key from init (enqueue-
     time membership, exactly when the reference consults its seen set,
     mod.rs:221-241) — it only changes when link expansion enqueues new
@@ -65,7 +70,7 @@ from netrunner_spark.operators.politeness import (
 )
 from netrunner_spark.operators.seen import unseen_once, upsert_shards
 from netrunner_spark.parser.udf import parse_links, parse_pages
-from netrunner_spark.tables import LakeCatalog
+from netrunner_spark.tables import N_BUCKETS, LakeCatalog
 
 FRONTIER_COLS = ["url", "url_hash", "host", "depth", "priority", "state", "round"]
 SCHEDULE_COLS = ["url", "url_hash", "host", "depth", "priority", "sched_round"]
@@ -82,78 +87,12 @@ CACHE_COLS = [
     "source",
 ]
 
-# round batches below this on-disk size broadcast into the fetch join;
-# above it (millions of URLs at 10^10-frontier scale) the join falls
-# back to shuffle-hash so the driver never holds the batch
-BROADCAST_BATCH_BYTES = 32 * 1024 * 1024
-
-
-def attach_image_checks(
-    fetched: DataFrame,
-    images: DataFrame,
-    prefer_broadcast: bool = True,
-    refs: DataFrame | None = None,
-) -> DataFrame:
-    """Decode/validate the batch's image payloads batch-wise
-    (decode_check_udf, Arrow batches — never per-row Python) and stamp
-    (image_ok, image_phash) onto the cache rows.
-
-    Shuffle-minimal shape (single pass over ``fetched``): the
-    content-heavy fetched rows NEVER shuffle. The slim ref keys join
-    into the image store (streaming it once), the decode verdicts —
-    O(batch) narrow rows — join back by broadcast (shuffle-hash when
-    the caller says the batch is too big to broadcast). Round 1 instead
-    unioned a refs/no-image split, recomputing the unpersisted fetch
-    join twice AND shuffling content through the image join.
-
-    image_ok is NULL for pages without an image payload (left join
-    miss); false records a corrupt/mismatched/absent payload without
-    dropping the row (validation reads it later)."""
-    from netrunner_spark.images import decode_check_udf
-
-    if refs is None:
-        # generic fallback: derive refs from the fetch output. NOTE:
-        # broadcasting the verdicts below MATERIALIZES this subtree, so
-        # with an expensive ``fetched`` pipeline the caller should pass
-        # ``refs`` from a slim source (fetcher.image_refs) instead —
-        # deriving here re-executes the whole fetch join once.
-        refs = (
-            fetched.filter(F.col("image_id").isNotNull())
-            .select("image_id")
-            .dropDuplicates()
-        )
-    refs = F.broadcast(refs) if prefer_broadcast else refs.hint("shuffle_hash")
-    checked = images.select("image_id", "bytes", "w", "h", "phash").join(
-        refs, "image_id"
-    ).withColumn("chk", decode_check_udf(F.col("bytes")))
-    verdicts = checked.select(
-        "image_id",
-        (
-            F.col("chk.decode_ok")
-            & (F.col("chk.w_actual") == F.col("w"))
-            & (F.col("chk.h_actual") == F.col("h"))
-            & (F.col("chk.phash_actual") == F.col("phash"))
-        ).alias("image_ok"),
-        F.col("chk.phash_actual").alias("image_phash"),
-    )
-    # shuffle_hash on the non-broadcast path too: an un-hinted left join
-    # sort-merge-joined — shuffling AND sorting the content-heavy
-    # fetched side by image_id at exactly the scale where broadcast is
-    # off (r5 review)
-    verdicts = (
-        F.broadcast(verdicts) if prefer_broadcast else verdicts.hint("shuffle_hash")
-    )
-    joined = fetched.join(verdicts, "image_id", "left")
-    # a ref whose image is MISSING from the store is a failure, not a
-    # no-image page: image_ok false, never null, when image_id is set
-    return joined.select(
-        *fetched.columns,
-        F.when(
-            F.col("image_id").isNotNull(),
-            F.coalesce(F.col("image_ok"), F.lit(False)),
-        ).alias("image_ok"),
-        "image_phash",
-    )
+# round batches below this on-disk size broadcast over the bucketed
+# store scan (exchange-free BHJ, no merge-sort startup); above it they
+# sort-merge co-located, so the driver never builds a broadcast of a
+# multi-million-row round. Measured crossover is ~100k slim rows (merge
+# won at 330k-row rounds, broadcast at 15k)
+BROADCAST_BATCH_BYTES = 4 * 1024 * 1024
 
 
 @dataclass
@@ -167,12 +106,6 @@ class CrawlConfig:
     follow_links: bool = False  # reference drains a fixed queue; we can expand
     max_depth: int = 3
     n_bloom_shards: int = 64
-    og_first: bool = True
-    # round batches below this on-disk size broadcast into the fetch /
-    # image joins; above it they fall back to shuffle-hash (a broadcast
-    # build is driver-serial — at multi-100k-row rounds that serial
-    # cost is the scaling bottleneck)
-    broadcast_batch_bytes: int = BROADCAST_BATCH_BYTES
     # >1: salt the scheduling window by pmod(url_hash, S) so a hot host
     # spreads over S tasks (north_rule skew mitigation); politeness
     # budget stays an upper bound (see politeness.schedule_rounds)
@@ -183,20 +116,12 @@ class CrawlConfig:
     # mode). Off by default: batch/mock runs model politeness logically
     # (budget slots per round) and stay deterministic + fast.
     enforce_wall_clock: bool = False
-    # colocated rounds: batches below this size broadcast over the
-    # bucketed scan (exchange-free BHJ, no merge-sort startup); above
-    # it they sort-merge co-located. Much lower than
-    # broadcast_batch_bytes because the alternative here is an
-    # exchange-free merge join, not a shuffle: measured crossover is
-    # ~100k slim rows (merge won at 330k-row rounds, broadcast at 15k)
-    colocated_broadcast_bytes: int = 4 * 1024 * 1024
-    # set to a bucket count to store the SCHEDULE as a Spark bucketed
-    # table on url_hash (same count as the fetcher's bucketed store):
-    # every round's fetch join is then a co-located, exchange-free
-    # sort-merge join with NO driver-serial broadcast build — the
-    # round-2 serial floor (BENCH/BASELINE.md §5). Pair with
-    # fetcher.prepare_colocated_fetcher.
-    colocated_buckets: int | None = None
+    # bucket count of the SCHEDULE, a Spark bucketed table on url_hash.
+    # Equal to the fetcher's store bucket count (both default to
+    # tables.N_BUCKETS), every round's fetch join is co-located and
+    # exchange-free with no driver-serial broadcast build — the round-2
+    # serial floor (BENCH/BASELINE.md §5).
+    colocated_buckets: int = N_BUCKETS
 
 
 class CrawlJob:
@@ -208,36 +133,27 @@ class CrawlJob:
         robots: DataFrame,
         config: CrawlConfig | None = None,
         lens=None,
-        images: DataFrame | None = None,
     ):
-        """``images``: the image+caption table (input_hint schema). When
-        given, every round decodes + validates the batch's image payloads
-        batch-wise (pandas UDF) and the cache rows carry the verdicts —
-        the north_star places image validation INSIDE the caching path."""
+        """``fetcher``: a MockFetcher over the bucketed store (see
+        ``sources.fetcher``), whose image store (if any) stamps each
+        cache row with its image verdict during the fetch, or an
+        ``HttpFetcher``."""
         self.spark = spark
         self.cat = catalog
         self.fetcher = fetcher
         self.robots = robots
         self.cfg = config or CrawlConfig()
         self.lens = lens
-        self.images = images
         self._budgets = None
 
     # ------------------------------------------------------------ lifecycle
-    def _colocated(self) -> bool:
-        return bool(self.cfg.colocated_buckets)
-
     def _schedule_df(self) -> DataFrame:
         # empty-schema fallback: a purely streaming-fed crawl calls
         # enqueue_frontier before any init_frontier, so no ``schedule``
-        # snapshot exists yet — the documented handoff entry point must
+        # table exists yet — the documented handoff entry point must
         # not raise (r5 review). All rounds then live in schedule_ext.
         try:
-            return (
-                self.cat.read_table("schedule")
-                if self._colocated()
-                else self.cat.read("schedule")
-            )
+            return self.cat.read_table("schedule")
         except FileNotFoundError:
             return self.spark.createDataFrame(
                 [],
@@ -246,11 +162,7 @@ class CrawlJob:
             )
 
     def _sched_rounds(self) -> list[int]:
-        return (
-            self.cat.table_partition_values("schedule", "sched_round")
-            if self._colocated()
-            else self.cat.partition_values("schedule", "sched_round")
-        )
+        return self.cat.table_partition_values("schedule", "sched_round")
 
     def init_frontier(self, urls: DataFrame) -> None:
         """urls(url, host, url_hash) → ``schedule`` table: robots verdict
@@ -259,15 +171,13 @@ class CrawlJob:
         (schedule_rounds — one window job for the whole crawl). The
         URL-seen bloom is built over all scheduled keys in the same
         step. No-op if a schedule exists (resume, W4/mod.rs:121-128)."""
-        if self.cat.exists("schedule") or (
-            self._colocated() and self.cat.table_meta("schedule") is not None
-        ):
+        if self.cat.table_meta("schedule") is not None:
             # heal the init crash window: schedule committed but the
             # bloom write never ran. Without this the seen guard
             # degrades to the full exact anti-join for the lifetime of
-            # the crawl (enqueue_frontier only FOLDS into an existing
-            # shards table, never creates one). Rebuild from schedule
-            # PLUS any schedule_ext appends that ran bloom-less.
+            # the crawl (a bloom that enqueue_frontier creates holds
+            # only its own new keys). Rebuild from schedule PLUS any
+            # schedule_ext appends that ran bloom-less.
             if not self.cat.exists("bloom_shards"):
                 keys = (
                     self._schedule_df()
@@ -298,19 +208,15 @@ class CrawlJob:
             F.lit(0.0).alias("priority"),
             F.lit(-1).alias("sched_round"),
         )
-        full = sched.unionByName(blocked)
-        if self._colocated():
-            # bucket-aligned with the fetcher's store: per-round reads are
-            # partition-pruned AND carry bucketing metadata into the join
-            self.cat.write_table_bucketed(
-                full,
-                "schedule",
-                key="url_hash",
-                n_buckets=self.cfg.colocated_buckets,
-                partition_by=["sched_round"],
-            )
-        else:
-            self.cat.write(full, "schedule", partition_by=["sched_round"])
+        # bucket-aligned with the fetcher's store: per-round reads are
+        # partition-pruned AND carry bucketing metadata into the join
+        self.cat.write_table_bucketed(
+            sched.unionByName(blocked),
+            "schedule",
+            key="url_hash",
+            n_buckets=self.cfg.colocated_buckets,
+            partition_by=["sched_round"],
+        )
         keys = (
             self._schedule_df()
             .filter(F.col("sched_round") >= 0)
@@ -360,19 +266,14 @@ class CrawlJob:
     def _round_batch(self, round_no: int) -> DataFrame | None:
         parts = []
         if round_no in self._sched_rounds():
-            if self._colocated():
-                # catalog-table read: the sched_round predicate prunes to
-                # one partition at plan time AND the scan keeps its
-                # url_hash bucketing → exchange-free fetch join
-                parts.append(
-                    self.cat.read_table("schedule")
-                    .filter(F.col("sched_round") == round_no)
-                    .drop("sched_round")
-                )
-            else:
-                parts.append(
-                    self.cat.read_partition("schedule", "sched_round", round_no)
-                )
+            # catalog-table read: the sched_round predicate prunes to
+            # one partition at plan time AND the scan keeps its
+            # url_hash bucketing → exchange-free fetch join
+            parts.append(
+                self.cat.read_table("schedule")
+                .filter(F.col("sched_round") == round_no)
+                .drop("sched_round")
+            )
         if self.cat.slice_exists("schedule_ext", "sched_round", round_no):
             parts.append(self.cat.read_slice("schedule_ext", "sched_round", round_no))
         if not parts:
@@ -383,12 +284,9 @@ class CrawlJob:
         return df
 
     def _batch_bytes(self, round_no: int) -> int:
-        base = (
-            self.cat.table_partition_bytes("schedule", "sched_round", round_no)
-            if self._colocated()
-            else self.cat.partition_bytes("schedule", "sched_round", round_no)
-        )
-        return base + self.cat.slice_bytes("schedule_ext", "sched_round", round_no)
+        return self.cat.table_partition_bytes(
+            "schedule", "sched_round", round_no
+        ) + self.cat.slice_bytes("schedule_ext", "sched_round", round_no)
 
     _METRIC_AGGS = (
         lambda: [
@@ -404,13 +302,6 @@ class CrawlJob:
             F.sum("attempts").alias("attempts"),
         ]
     )
-
-    def _write_metrics(self, round_no: int) -> None:
-        """Per-host lineage/metrics for one committed round (north_rule).
-        Column-pruned scan of the written slice — content never read."""
-        slice_df = self.cat.read_slice("cache", "fetched_round", round_no)
-        metrics = slice_df.groupBy("host").agg(*CrawlJob._METRIC_AGGS())
-        self.cat.write_slice(metrics, "metrics", "round", round_no)
 
     def _write_metrics_bulk(self, rounds: list[int]) -> None:
         """Metrics for MANY committed cache rounds in ONE pass (r6
@@ -466,52 +357,21 @@ class CrawlJob:
             return 0
 
         # 1. cache slice — the ONE pass that materializes fetched content
-        #    (idempotent overwrite on replay). Colocated mode: bucketed
-        #    sort-merge join, no broadcast sizing needed (and image
-        #    validation is fused into the fetch stage). Otherwise the
-        #    fetch join broadcasts the batch only while it is genuinely
-        #    small (driver-side stat of the schedule partition, no job).
-        # colocated layout enables the exchange-free merge join; batch
-        # size still picks merge vs broadcast-over-the-bucketed-scan
-        # (both exchange-free; BHJ skips the merge-sort startup, which
-        # dominates at small rounds). Non-colocated: broadcast only
-        # while the batch is genuinely small. Inline-image fetchers
-        # stamp (image_ok, image_phash) during fetch — dropping the
-        # stamp would silently pay the decode and discard the verdict.
+        #    (idempotent overwrite on replay). Both join shapes are
+        #    exchange-free over the bucketed store; the batch's on-disk
+        #    size (driver-side stat, no job) picks broadcast-over-the-
+        #    bucketed-scan while small (it skips the merge-sort startup,
+        #    which dominates small rounds), the co-located merge join
+        #    above. A fetcher with an image store stamps
+        #    (image_ok, image_phash) during the fetch — dropping the
+        #    stamp would silently pay the decode and discard the verdict.
         inline_images = getattr(self.fetcher, "images_by_url", None) is not None
-        threshold = (
-            self.cfg.colocated_broadcast_bytes
-            if self._colocated()
-            else self.cfg.broadcast_batch_bytes
-        )
-        small = self._batch_bytes(round_no) < threshold
+        small = self._batch_bytes(round_no) < BROADCAST_BATCH_BYTES
         fetched = self.fetcher.fetch(batch, prefer_broadcast=small).select(
             *(CACHE_COLS + ["image_ok", "image_phash"])
             if inline_images
             else CACHE_COLS
         )
-        if self.images is not None and not inline_images:
-            # reuse the SAME size verdict as the fetch join (line above):
-            # the old colocated arm hardcoded small=True, broadcasting
-            # O(round)-sized refs/verdicts regardless of batch size —
-            # exactly the driver-kill the thresholds exist to prevent
-            # (r5 review; also removes a duplicate directory stat)
-            refs = (
-                self.fetcher.image_refs(batch, prefer_broadcast=small)
-                if hasattr(self.fetcher, "image_refs")
-                else None
-            )
-            if refs is None:
-                # generic fallback derives refs FROM the fetch output and
-                # materializes it for the verdict broadcast; checkpoint
-                # so the cache write below reuses the same materialized
-                # rows — with a network fetcher the recompute was a
-                # second full HTTP pass per round, doubling the per-host
-                # request rate past the politeness budget (r5 review)
-                fetched = fetched.localCheckpoint(eager=True)
-            fetched = attach_image_checks(
-                fetched, self.images, prefer_broadcast=small, refs=refs
-            )
         obs = Observation()
         aggs = [F.count(F.lit(1)).alias("n")]
         if self.cfg.follow_links:
@@ -637,21 +497,15 @@ class CrawlJob:
         # order had the fatal window: keys in schedule_ext but not in
         # the bloom probe as definitely-unseen and are scheduled AGAIN
         # on replay — a false NEGATIVE no backstop can catch.
-        if shards is not None:
-            self.cat.write(
-                upsert_shards(shards, newly.select("url_hash"), n_sh),
-                "bloom_shards",
-            )
-        elif not self.cat.exists("bloom_shards"):
-            # streaming-only mode (no init_frontier ever ran): build the
-            # bloom from the first enqueue so later cycles get the
-            # probe pre-filter instead of exact-anti-join-only forever
-            # (r5 review); same fold-before-append ordering as above
-            self.cat.write(
-                upsert_shards(None, newly.select("url_hash"), n_sh),
-                "bloom_shards",
-            )
-            self.cat.vacuum("bloom_shards")
+        # Streaming-only mode (no init_frontier ever ran, shards None)
+        # builds the bloom here from the first enqueue, so later cycles
+        # get the probe pre-filter instead of exact-anti-join-only
+        # forever. Each fold is a full bloom snapshot; the
+        # vacuum keeps the last two, so disk stays bounded over rounds.
+        self.cat.write(
+            upsert_shards(shards, newly.select("url_hash"), n_sh), "bloom_shards"
+        )
+        self.cat.vacuum("bloom_shards")
         self.cat.append_partitions(newly, "schedule_ext", "sched_round")
 
     # ------------------------------------------------------- frontier state
@@ -695,13 +549,14 @@ class CrawlJob:
         self.cat.vacuum("frontier")
 
     # ------------------------------------------------------------ archive
-    def archive_stage(self, images: DataFrame | None = None) -> dict:
+    def archive_stage(self) -> dict:
         """The reference crawl's tail (§3.1, create_archives,
         archive.rs:356-403): 2xx filter (F6) → html_to_text parse (X2,
         Arrow-batched) → canonical dedup (F9) → parsed table; plus the
-        north_star image path: join cached image_id FKs to the image
-        table and decode/validate batch-wise (decode_check_udf) —
-        phash/shape mismatches are counted, never silently dropped.
+        north_star image tally: the verdicts the fetch stage stamped on
+        the cache rows (``image_ok``) — phash/shape mismatches and
+        images missing from the store are counted, never silently
+        dropped. A cache without the stamp (no image store) reports 0.
 
         This is the perfectly-parallel stage of the drain (pure
         per-partition Python over Arrow batches; ONE pass over the
@@ -709,7 +564,7 @@ class CrawlJob:
         the parsed count via ``observe`` on the written rows — the r3
         verdict's two extra full scans (parsed re-read + ok.count) are
         gone; one shuffle for the canonical dedup)."""
-        from pyspark.sql import Observation
+        from netrunner_spark.operators.dedup import canonical_dedup
 
         cache = self.cache_df()
         if cache is None:
@@ -724,8 +579,6 @@ class CrawlJob:
         in_aggs = [F.count(F.lit(1)).alias("n")]
         stamped = "image_ok" in ok.columns
         if stamped:
-            # per-round validation already stamped the cache rows —
-            # tally them on the same scan the parse consumes
             in_aggs += [
                 F.sum(
                     F.when(F.col("image_id").isNotNull(), 1).otherwise(0)
@@ -744,64 +597,17 @@ class CrawlJob:
         parsed = parse_pages(
             ok.select("url", "content"), fallback_counter=fb_acc
         )
-        from netrunner_spark.operators.dedup import canonical_dedup
-
         deduped = canonical_dedup(parsed).observe(
             obs_out, F.count(F.lit(1)).alias("n")
         )
         self.cat.write(deduped, "parsed", bucket_hint="canonical_url")
         got_in, got_out = obs_in.get, obs_out.get
         n_total, n_parsed = got_in["n"], got_out["n"]
-
-        images_checked = image_failures = 0
-        if stamped:
-            images_checked = got_in["img_n"] or 0
-            image_failures = got_in["img_bad"] or 0
-        elif images is not None:
-            from netrunner_spark.images import decode_check_udf
-
-            # match attach_image_checks' stamped policy exactly (r5
-            # review): a ref whose image is MISSING from the store is a
-            # failure — the old inner join silently dropped it from
-            # both tallies. Decode each DISTINCT image once, then count
-            # per ref row (the stamped path's per-row multiplicity).
-            refs = ok.filter(F.col("image_id").isNotNull()).select("image_id")
-            per_image = (
-                refs.dropDuplicates()
-                .join(
-                    images.select("image_id", "bytes", "w", "h", "phash"),
-                    "image_id",
-                    "left",
-                )
-                .withColumn("chk", decode_check_udf(F.col("bytes")))
-                .select(
-                    "image_id",
-                    (
-                        ~F.coalesce(
-                            F.col("chk.decode_ok")
-                            & (F.col("chk.w_actual") == F.col("w"))
-                            & (F.col("chk.h_actual") == F.col("h"))
-                            & (F.col("chk.phash_actual") == F.col("phash")),
-                            F.lit(False),
-                        )
-                    ).alias("bad"),
-                )
-            )
-            verdicts = (
-                refs.join(per_image, "image_id", "left")
-                .select(
-                    F.count(F.lit(1)).alias("n"),
-                    F.sum(F.when(F.col("bad"), 1).otherwise(0)).alias("bad"),
-                )
-                .collect()[0]
-            )
-            images_checked, image_failures = verdicts["n"], verdicts["bad"] or 0
-
         return {
             "parsed": n_parsed,
             "dupes_dropped": n_total - n_parsed,
-            "images_checked": images_checked,
-            "image_failures": image_failures,
+            "images_checked": (got_in["img_n"] or 0) if stamped else 0,
+            "image_failures": (got_in["img_bad"] or 0) if stamped else 0,
             "parse_fallbacks": fb_acc.value,
         }
 
@@ -820,7 +626,7 @@ class CrawlJob:
         per round; keyed on (host, round) so nothing collapses."""
         self._backfill_metrics()
         self._backfill_expansion()
-        nb = n_buckets or self.cfg.colocated_buckets or 64
+        nb = n_buckets or self.cfg.colocated_buckets
         hi = self.cat.compact_slices(
             "cache", "fetched_round", key="url_hash", n_buckets=nb
         )

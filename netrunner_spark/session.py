@@ -12,6 +12,16 @@ import os
 from pyspark.sql import SparkSession
 
 
+def default_driver_memory() -> str:
+    """Driver heap when ``SPARK_DRIVER_MEM`` is unset: a quarter of the
+    host's physical memory, at least 1g and at most 48g. A fixed large
+    heap lets the JVM grow past what a small host holds (a 48g default
+    got a long test run OOM-killed on a 15 GiB host)."""
+    phys = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    mib = min(max(phys // 4 // 2**20, 1024), 48 * 1024)
+    return f"{mib}m"
+
+
 def get_spark(
     app_name: str = "netrunner_spark",
     master: str | None = None,
@@ -63,7 +73,10 @@ def get_spark(
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "48g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_DRIVER_MEM") or default_driver_memory(),
+        )
         # codec knob: at lake scale table bytes are the scarce resource
         # (storage AND bus traffic on every scan) — zstd buys ~40% on
         # text tables for extra CPU. Default stays snappy (Spark's):

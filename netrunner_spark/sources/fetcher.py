@@ -6,10 +6,13 @@ headers, content, image_id, attempts, source]``:
 
 * ``MockFetcher`` — deterministic, network-free: a fetch against the
   synthetic page store IS a key lookup, so it's expressed as an
-  equi-join on url_hash (sort-merge or broadcast — Catalyst decides;
-  at 10^10 frontier rows the page store is the big side and the round
-  batch the small side, so the join broadcasts the BATCH, never the
-  store). Retry semantics become column logic:
+  equi-join on url_hash. ``prepare_colocated_fetcher`` lays the store
+  (and the image payloads) out bucketed on url_hash with the round
+  batches' bucket count, so the join is exchange-free either way it
+  runs: the batch broadcast over the bucketed store scan (small
+  rounds), or a co-located merge join (at 10^10 frontier rows a round
+  is millions of URLs — too big to broadcast). Retry semantics become
+  column logic:
     - flaky_once pages cost one extra attempt then succeed (expo
       backoff budget: 3 tries, crawler.rs:73-75)
     - 403/404 are terminal, never retried (crawler.rs:48-59)
@@ -30,6 +33,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from netrunner_spark.tables import N_BUCKETS
+
 RETRY_BUDGET = 3  # crawler.rs:73-75
 NO_RETRY_STATUSES = (403, 404)  # crawler.rs:48-59
 
@@ -39,84 +44,47 @@ class MockFetcher:
         self,
         web: DataFrame,
         og_first: bool = True,
-        colocated: bool = False,
         images_by_url: DataFrame | None = None,
     ):
-        """``web``: synthetic page store (synth.gen_web schema).
+        """``web``: synthetic page store (synth.gen_web schema), read
+        back as a Spark bucketed table on ``url_hash`` with the round
+        batches' bucket count — build it with ``prepare_colocated_fetcher``
+        (on a cluster: Iceberg ``bucket(N, url_hash)`` + storage-
+        partitioned joins).
 
-        ``colocated=True``: the store (and the round batches fed to
-        ``fetch``) are Spark bucketed tables on ``url_hash`` with equal
-        bucket counts — the fetch join then runs as an exchange-free
-        sort-merge join with NO driver-built broadcast relation (the
-        round-2 serial floor). On a cluster this is Iceberg
-        ``bucket(N, url_hash)`` + storage-partitioned joins.
-
-        ``images_by_url``: pre-co-located image payloads
-        (url_hash, bytes, w, h, phash), bucketed the same way — image
-        decode+validate then happens INLINE in the same exchange-free
-        stage (see prepare_colocated_fetcher)."""
+        ``images_by_url``: image payloads (url_hash, bytes, w, h, phash),
+        bucketed the same way — image decode+validate then happens
+        INLINE in the fetch stage, and every hit row carries
+        (image_ok, image_phash)."""
         if "url_hash" not in web.columns:
             web = web.withColumn("url_hash", F.xxhash64("url"))
         self.web = web
         self.og_first = og_first
-        self.colocated = colocated
         self.images_by_url = images_by_url
 
-    def _side(self, df: DataFrame, prefer_broadcast: bool | None) -> DataFrame:
-        """Join-strategy dial for the batch/keys side: co-located merge
-        join (bucketed, exchange-free) / broadcast / shuffle-hash.
+    @staticmethod
+    def _side(df: DataFrame, prefer_broadcast: bool) -> DataFrame:
+        """Join hint for the batch side; both shapes are exchange-free
+        over the bucketed store. A small batch broadcasts over the
+        bucketed scan, which skips the merge-sort startup that dominates
+        a round of thousands of rows; a big one merge-joins co-located
+        with no driver-built broadcast relation."""
+        return F.broadcast(df) if prefer_broadcast else df.hint("merge")
 
-        Colocated layout + small batch (prefer_broadcast=True) still
-        broadcasts: a BHJ over the bucketed scan is exchange-free too
-        and skips the merge-sort startup, which dominates when a round
-        is thousands of rows rather than millions (the layout decides
-        what is POSSIBLE; the per-round batch size decides what is
-        fastest). None = the at-scale default for the layout."""
-        if self.colocated:
-            return F.broadcast(df) if prefer_broadcast else df.hint("merge")
-        return (
-            df.hint("shuffle_hash") if prefer_broadcast is False else F.broadcast(df)
-        )
+    def fetch(self, batch: DataFrame, prefer_broadcast: bool = True) -> DataFrame:
+        """batch: frontier rows selected for this round (the round loop
+        reads them from the bucketed ``schedule``).
 
-    def image_refs(self, batch: DataFrame, prefer_broadcast: bool = True) -> DataFrame:
-        """Distinct image FKs this batch will touch — a COLUMN-PRUNED
-        (url, image_id) scan of the store, no content read. Exists so
-        image validation never has to re-derive refs from the fetch
-        output (materializing that for a broadcast would re-run the
-        full content scan — measured +14 s/round at bench scale)."""
-        keys = self._side(batch.select("url_hash"), prefer_broadcast)
-        return (
-            self.web.select("url_hash", "image_id")
-            .join(keys, "url_hash")
-            .filter(F.col("image_id").isNotNull())
-            .select("image_id")
-            .dropDuplicates()
-        )
+        ``prefer_broadcast``: the round loop passes True while the
+        batch's on-disk size is small, False above it (a multi-million-
+        row broadcast with URL strings would kill the driver).
 
-    def fetch(
-        self, batch: DataFrame, prefer_broadcast: bool | None = None
-    ) -> DataFrame:
-        """batch: frontier rows selected for this round.
-
-        ``prefer_broadcast``: None picks the layout's default (merge
-        when colocated, broadcast otherwise); the round loop passes an
-        explicit bool from the batch's on-disk size.
-
-        The round batch (≤ Σ host budgets rows) is small relative to the
-        page store, and Spark cannot broadcast the PRESERVED side of an
-        outer join — so a naive ``batch LEFT JOIN store`` would sort-merge
-        the whole store every round. Instead: broadcast INNER join for
-        hits + broadcast LEFT-ANTI for misses (connection failures),
-        union. Both joins broadcast the batch and stream the store once,
-        shuffle-free — the plan that survives a 10^10-row store.
-
-        ``prefer_broadcast=False``: the caller determined the batch is
-        too big to broadcast (a round at 10^10-frontier scale is
-        millions of URLs — a multi-million-row broadcast with URL
-        strings would kill the driver); fall back to a shuffle-hash
-        join on url_hash, which stays shuffle-light on the store side
-        when the store is bucketed by url_hash.
-        """
+        Spark cannot broadcast the PRESERVED side of an outer join, so a
+        naive ``batch LEFT JOIN store`` could never broadcast the batch.
+        Instead: INNER join for hits + LEFT-ANTI for misses (connection
+        failures), union. Broadcast: both joins broadcast
+        the batch and stream the store once. Merge: both sort-merge
+        bucket by bucket against the store. Neither shuffles."""
         has_ia = "ia_status" in self.web.columns
         pages = self.web.select(
             "url_hash",
@@ -164,23 +132,19 @@ class MockFetcher:
             .otherwise(F.lit(src_primary))
             .alias("source"),
         )
-        # keys present in the store: column-pruned scan (url_hash only) ×
-        # broadcast batch — small result, safe to broadcast into the anti.
-        # Colocated mode: the whole chain stays bucket-aligned instead.
-        if self.colocated and not prefer_broadcast:
-            present = pages.select("url_hash").hint("merge")
-            misses_src = batch.join(present, "url_hash", "left_anti")
-        else:
-            bc = prefer_broadcast is not False
-            bkeys = (
-                F.broadcast(batch.select("url_hash"))
-                if bc
-                else batch.select("url_hash").hint("shuffle_hash")
+        # keys present in the store: column-pruned scan (url_hash only).
+        # Broadcast: × broadcast batch keys — a small result, safe to
+        # broadcast into the anti join. Merge: the whole chain stays
+        # bucket-aligned instead.
+        if prefer_broadcast:
+            present = F.broadcast(
+                pages.select("url_hash").join(
+                    F.broadcast(batch.select("url_hash")), "url_hash"
+                )
             )
-            present = pages.select("url_hash").join(bkeys, "url_hash")
-            present = F.broadcast(present) if bc else present
-            misses_src = batch.join(present, "url_hash", "left_anti")
-        misses = misses_src.select(
+        else:
+            present = pages.select("url_hash").hint("merge")
+        misses = batch.join(present, "url_hash", "left_anti").select(
             *batch_cols,
             F.lit(None).cast("int").alias("status"),  # connection failure
             F.lit(None).cast(
@@ -207,8 +171,8 @@ class MockFetcher:
         """Image decode+validate fused into the fetch stage: a co-located
         left join against the pre-bucketed (url_hash → image payload)
         table, then the Arrow-batched decode UDF — zero exchanges, zero
-        broadcast builds (vs attach_image_checks, which must broadcast
-        refs + verdicts when the store is not bucket-aligned).
+        broadcast builds. A page whose image is missing from the payload
+        table gets ``image_ok = false``, never null.
 
         ``batch_keys`` (small rounds): compute slim per-url_hash
         verdicts by broadcasting the batch's keys into the image table,
@@ -279,7 +243,7 @@ def prepare_colocated_fetcher(
     cat,
     web: DataFrame,
     images: DataFrame | None = None,
-    n_buckets: int = 32,
+    n_buckets: int = N_BUCKETS,
     og_first: bool = True,
 ) -> MockFetcher:
     """One-time layout job (drain init, amortized over every round):
@@ -343,10 +307,7 @@ def prepare_colocated_fetcher(
             )
         ibu = cat.read_table("images_by_url")
     return MockFetcher(
-        cat.read_table("web_store"),
-        og_first=og_first,
-        colocated=True,
-        images_by_url=ibu,
+        cat.read_table("web_store"), og_first=og_first, images_by_url=ibu
     )
 
 

@@ -32,6 +32,9 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 BUCKET_COL = "_bucket"
+# bucket count of the co-located crawl layout (page store, image
+# payloads, schedule) when the caller names none
+N_BUCKETS = 8
 
 
 class LakeCatalog:
@@ -125,46 +128,6 @@ class LakeCatalog:
         """One committed slice (no partition column attached)."""
         path = os.path.join(self._tdir(table), "data", f"{slice_col}={slice_val}")
         return self.spark.read.parquet(path)
-
-    # ------------------------------------------------- partitioned snapshots
-    def partition_values(self, table: str, part_col: str) -> list[int]:
-        """Committed partition values of a hive-partitioned snapshot —
-        driver-side listdir, ZERO Spark jobs (the round loop's
-        "how many rounds" question must not cost a job)."""
-        try:
-            snap = self.snapshot_path(table)
-        except FileNotFoundError:
-            return []
-        return sorted(
-            int(e.name.split("=", 1)[1])
-            for e in os.scandir(snap)
-            if e.is_dir() and e.name.startswith(f"{part_col}=")
-        )
-
-    def read_partition(self, table: str, part_col: str, val) -> DataFrame:
-        """One partition of a snapshot, read by DIRECT PATH — skips the
-        full partition-discovery listing a filter-on-read would do every
-        round (the partition column is not attached; the caller knows it)."""
-        return self.spark.read.parquet(
-            os.path.join(self.snapshot_path(table), f"{part_col}={val}")
-        )
-
-    def partition_bytes(self, table: str, part_col: str, val) -> int:
-        """On-disk bytes of one snapshot partition (driver stat, no job)
-        — used to pick broadcast vs shuffle join for the round batch.
-        0 when the table has no snapshot (streaming-only crawls have no
-        ``schedule`` table at all — partition_values already returns []
-        for that case, r5 review)."""
-        try:
-            snap = self.snapshot_path(table)
-        except FileNotFoundError:
-            return 0
-        d = os.path.join(snap, f"{part_col}={val}")
-        if not os.path.isdir(d):
-            return 0
-        return sum(
-            e.stat().st_size for e in os.scandir(d) if e.name.endswith(".parquet")
-        )
 
     def append_partitions(self, df: DataFrame, table: str, part_col: str) -> None:
         """Append whole NEW partitions into a slice-tree table
@@ -381,8 +344,8 @@ class LakeCatalog:
 
     def table_partition_bytes(self, table: str, part_col: str, val) -> int:
         """On-disk bytes of one partition of a BUCKETED table (driver
-        stat, no job) — the broadcast-vs-merge dial for colocated
-        rounds."""
+        stat, no job) — the broadcast-vs-merge dial for crawl rounds.
+        0 when the partition (or the table) does not exist."""
         d = os.path.join(self._tdir(table), "bucketed", f"{part_col}={val}")
         if not os.path.isdir(d):
             return 0

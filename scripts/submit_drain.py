@@ -34,10 +34,12 @@ def main() -> int:
     p.add_argument("--pages", type=int, default=60)
     p.add_argument("--mode", choices=["pairs", "html"], default="pairs")
     p.add_argument("--lake", default=None, help="table root (default: tmpdir)")
-    p.add_argument("--buckets", type=int, default=8, help="url_hash buckets (0 = broadcast join)")
+    p.add_argument("--buckets", type=int, default=8, help="url_hash buckets (>= 1)")
     p.add_argument("--rps", type=float, default=2.0)
     p.add_argument("--round-seconds", type=float, default=None)
     args = p.parse_args()
+    if args.buckets < 1:
+        p.error("--buckets must be >= 1")
 
     # master/deploy-mode come from spark-submit, not from code: the same
     # jobfile runs at N or 4N executors with no change here.
@@ -52,7 +54,7 @@ def main() -> int:
 
     # imports resolve from the --py-files zip on driver AND executors
     from netrunner_spark.plans.crawl import CrawlConfig, CrawlJob
-    from netrunner_spark.sources.fetcher import MockFetcher, prepare_colocated_fetcher
+    from netrunner_spark.sources.fetcher import prepare_colocated_fetcher
     from netrunner_spark.synth import gen_images, gen_pair_web, gen_robots, gen_web
     from netrunner_spark.tables import LakeCatalog
     from netrunner_spark.urlnorm import url_hash_col
@@ -74,13 +76,10 @@ def main() -> int:
             rps=args.rps,
             round_seconds=args.round_seconds or args.pages / 3.0,
             max_rounds=50,
-            colocated_buckets=args.buckets or None,
+            colocated_buckets=args.buckets,
         )
-        if args.buckets:
-            fetcher = prepare_colocated_fetcher(cat, web, images, n_buckets=args.buckets)
-            job = CrawlJob(spark, cat, fetcher, robots, cfg)
-        else:
-            job = CrawlJob(spark, cat, MockFetcher(web), robots, cfg, images=images)
+        fetcher = prepare_colocated_fetcher(cat, web, images, n_buckets=args.buckets)
+        job = CrawlJob(spark, cat, fetcher, robots, cfg)
         job.init_frontier(frontier0)
         t0 = time.time()
         stats = job.run()

@@ -3,10 +3,10 @@ one cache slice dir per round; ``compact_slices`` folds the committed
 slices into ONE bucketed base snapshot without changing what any reader
 sees, and W4 resume keeps working from the compacted state."""
 
+import pytest
 from pyspark.sql import functions as F
 
 from netrunner_spark.plans.crawl import CrawlConfig, CrawlJob
-from netrunner_spark.sources.fetcher import MockFetcher
 from netrunner_spark.synth import gen_robots, gen_web
 from netrunner_spark.tables import LakeCatalog
 
@@ -15,10 +15,27 @@ def _rows(df, *cols):
     return sorted(tuple(r[c] for c in cols) for r in df.collect())
 
 
-def _crawl(spark, tmp_path, web, robots):
+@pytest.fixture(scope="module")
+def webs(spark, colocated_fetcher):
+    """``get(hosts, pages)`` → (web, robots, fetcher), one store lake per
+    web size, shared by the tests that crawl it."""
+    built = {}
+
+    def get(hosts, pages):
+        if (hosts, pages) not in built:
+            web = gen_web(spark, hosts, pages).cache()
+            built[hosts, pages] = (
+                web, gen_robots(spark, hosts), colocated_fetcher(web)
+            )
+        return built[hosts, pages]
+
+    return get
+
+
+def _crawl(spark, tmp_path, web, robots, fetcher):
     cat = LakeCatalog(spark, str(tmp_path / "lake"))
     cfg = CrawlConfig(max_rounds=60, n_bloom_shards=8)
-    job = CrawlJob(spark, cat, MockFetcher(web), robots, cfg)
+    job = CrawlJob(spark, cat, fetcher, robots, cfg)
     job.init_frontier(
         web.select("url", "host", F.xxhash64("url").alias("url_hash"))
     )
@@ -26,10 +43,9 @@ def _crawl(spark, tmp_path, web, robots):
     return cat, cfg, job
 
 
-def test_compaction_preserves_rows_and_resume(spark, tmp_path):
-    web = gen_web(spark, 3, 12).cache()
-    robots = gen_robots(spark, 3)
-    cat, cfg, job = _crawl(spark, tmp_path, web, robots)
+def test_compaction_preserves_rows_and_resume(spark, webs, tmp_path):
+    web, robots, fetcher = webs(3, 12)
+    cat, cfg, job = _crawl(spark, tmp_path, web, robots, fetcher)
 
     n_slices = len(cat._slice_values("cache", "fetched_round"))
     assert n_slices >= 2  # multiple rounds → something to compact
@@ -50,7 +66,7 @@ def test_compaction_preserves_rows_and_resume(spark, tmp_path):
     # resume from the compacted state: the floor stands in for the
     # deleted slice markers, so a fresh job sees the same next round and
     # its run() is a no-op
-    job2 = CrawlJob(spark, cat, MockFetcher(web), robots, cfg)
+    job2 = CrawlJob(spark, cat, fetcher, robots, cfg)
     job2.init_frontier(
         web.select("url", "host", F.xxhash64("url").alias("url_hash"))
     )
@@ -59,10 +75,9 @@ def test_compaction_preserves_rows_and_resume(spark, tmp_path):
     assert _rows(cat.read_slices("cache"), "url", "status", "fetched_round") == before
 
 
-def test_crawl_continues_after_compaction_and_recompacts(spark, tmp_path):
-    web = gen_web(spark, 3, 12).cache()
-    robots = gen_robots(spark, 3)
-    cat, cfg, job = _crawl(spark, tmp_path, web, robots)
+def test_crawl_continues_after_compaction_and_recompacts(spark, webs, tmp_path):
+    web, robots, fetcher = webs(3, 12)
+    cat, cfg, job = _crawl(spark, tmp_path, web, robots, fetcher)
     seeds = {r["url"] for r in cat.read_slices("cache").select("url").collect()}
     floor = job.compact_cache(n_buckets=4)
 
@@ -93,7 +108,7 @@ def test_crawl_continues_after_compaction_and_recompacts(spark, tmp_path):
 
 
 def test_recompaction_crash_before_floor_update_no_double_count(
-    spark, tmp_path, monkeypatch
+    spark, webs, tmp_path, monkeypatch
 ):
     """ADVICE r4 (medium): the SECOND compaction merges the new slices
     into the head snapshot BEFORE updating the ``_compacted`` floor. A
@@ -102,9 +117,8 @@ def test_recompaction_crash_before_floor_update_no_double_count(
     ``read_slices`` now bounds the head to the committed floor."""
     import os as _os
 
-    web = gen_web(spark, 2, 10).cache()
-    robots = gen_robots(spark, 2)
-    cat, _cfg, job = _crawl(spark, tmp_path, web, robots)
+    web, robots, fetcher = webs(2, 10)
+    cat, _cfg, job = _crawl(spark, tmp_path, web, robots, fetcher)
     seeds = {r["url"] for r in cat.read_slices("cache").select("url").collect()}
     floor = job.compact_cache(n_buckets=4)
     assert floor is not None
@@ -152,12 +166,11 @@ def test_recompaction_crash_before_floor_update_no_double_count(
     assert cat.read_slices("cache").count() == n_combined
 
 
-def test_read_slices_excludes_sub_floor_stragglers(spark, tmp_path):
+def test_read_slices_excludes_sub_floor_stragglers(spark, webs, tmp_path):
     """Crash between snapshot commit and slice deletion leaves a slice
     dir at/below the floor — it must NOT double-count."""
-    web = gen_web(spark, 2, 10).cache()
-    robots = gen_robots(spark, 2)
-    cat, _cfg, job = _crawl(spark, tmp_path, web, robots)
+    web, robots, fetcher = webs(2, 10)
+    cat, _cfg, job = _crawl(spark, tmp_path, web, robots, fetcher)
     # materialize round 0 BEFORE compaction deletes its files
     first = cat.read_slice("cache", "fetched_round", 0).localCheckpoint()
     n = cat.read_slices("cache").count()

@@ -159,15 +159,11 @@ class TestLakeCatalog:
 
 class TestBloom:
     def test_probe_semantics(self, spark):
-        from netrunner_spark.operators.seen import (
-            build_shards,
-            merge_shards,
-            unseen_only,
-        )
+        from netrunner_spark.operators.seen import unseen_only, upsert_shards
 
         seen = spark.range(0, 500).select(F.xxhash64("id").alias("url_hash"))
         cand = spark.range(400, 700).select(F.xxhash64("id").alias("url_hash"))
-        shards = merge_shards(None, build_shards(seen, 4))
+        shards = upsert_shards(None, seen, 4)
         out = unseen_only(cand, seen, shards, 4)
         got = {r["url_hash"] for r in out.collect()}
         want = {
@@ -182,15 +178,14 @@ class TestBloom:
         """``unseen_once`` gives ``unseen_only``'s rows from ONE held
         probe, and drops the held rows when its block exits."""
         from netrunner_spark.operators.seen import (
-            build_shards,
-            merge_shards,
             unseen_once,
             unseen_only,
+            upsert_shards,
         )
 
         seen = spark.range(0, 500).select(F.xxhash64("id").alias("url_hash"))
         cand = spark.range(400, 700).select(F.xxhash64("id").alias("url_hash"))
-        shards = merge_shards(None, build_shards(seen, 4))
+        shards = upsert_shards(None, seen, 4)
         def held():
             return spark.sparkContext._jsc.getPersistentRDDs().size()
 

@@ -4,23 +4,28 @@ integer PageRank → feed the authority back into frontier priority
 (with_priority). This is the composition the operators exist for: the
 crawler's own output re-ranks its next frontier."""
 
+import pytest
 from pyspark.sql import functions as F
 
 from netrunner_spark.operators.graph import pagerank_int
 from netrunner_spark.operators.politeness import with_priority
 from netrunner_spark.parser.udf import parse_pages
 from netrunner_spark.plans.crawl import CrawlConfig, CrawlJob
-from netrunner_spark.sources.fetcher import MockFetcher
 from netrunner_spark.synth import gen_robots, gen_web
 from netrunner_spark.tables import LakeCatalog
 from netrunner_spark.urlnorm import url_hash_col
 
 
-def test_crawl_to_pagerank_to_priority_loop(spark, tmp_path):
-    web = gen_web(spark, 4, 12)
-    robots = gen_robots(spark, 4)
+@pytest.fixture(scope="module")
+def store(spark, colocated_fetcher):
+    web = gen_web(spark, 4, 12).cache()
+    return web, gen_robots(spark, 4), colocated_fetcher(web)
+
+
+def test_crawl_to_pagerank_to_priority_loop(spark, store, tmp_path):
+    web, robots, fetcher = store
     cat = LakeCatalog(spark, str(tmp_path / "lake"))
-    job = CrawlJob(spark, cat, MockFetcher(web), robots, CrawlConfig())
+    job = CrawlJob(spark, cat, fetcher, robots, CrawlConfig())
     job.init_frontier(
         web.select("url", "host", url_hash_col("url").alias("url_hash"))
     )
@@ -69,7 +74,7 @@ def test_crawl_to_pagerank_to_priority_loop(spark, tmp_path):
     assert any(boosted[u] < base[u] - 1e-12 for u in base)
 
 
-def test_crawl_to_opic_to_budget_drain_loop(spark, tmp_path):
+def test_crawl_to_opic_to_budget_drain_loop(spark, store, tmp_path):
     """The OPIC sibling of the PageRank loop: crawl → link graph →
     OPIC history → Hamilton fetch budgets → the budgets actually gate
     the next round's per-host batch (rank_round)."""
@@ -77,10 +82,9 @@ def test_crawl_to_opic_to_budget_drain_loop(spark, tmp_path):
     from netrunner_spark.operators.graph import opic_int
     from netrunner_spark.operators.politeness import rank_round, with_priority
 
-    web = gen_web(spark, 4, 12)
-    robots = gen_robots(spark, 4)
+    web, robots, fetcher = store
     cat = LakeCatalog(spark, str(tmp_path / "lake"))
-    job = CrawlJob(spark, cat, MockFetcher(web), robots, CrawlConfig())
+    job = CrawlJob(spark, cat, fetcher, robots, CrawlConfig())
     job.init_frontier(
         web.select("url", "host", url_hash_col("url").alias("url_hash"))
     )

@@ -14,7 +14,6 @@ from netrunner_spark.parser.udf import parse_pages
 from netrunner_spark.plans.check_urls import check_urls, write_urls_txt
 from netrunner_spark.plans.crawl import CrawlConfig, CrawlJob
 from netrunner_spark.plans.validate import validate_crawl
-from netrunner_spark.sources.fetcher import MockFetcher
 from netrunner_spark.synth import gen_cdx, gen_images, gen_robots, gen_sitemaps, gen_web
 from netrunner_spark.tables import LakeCatalog
 
@@ -36,6 +35,11 @@ def world(spark):
             rules=[LensRule("skip", "https://host0.test/wiki/*")],
         ),
     }
+
+
+@pytest.fixture(scope="module")
+def fetcher(world, colocated_fetcher):
+    return colocated_fetcher(world["web"])
 
 
 @pytest.fixture(scope="module")
@@ -65,13 +69,13 @@ def test_urls_txt_roundtrip(spark, discovered, tmp_path):
 
 
 @pytest.fixture(scope="module")
-def crawled(spark, world, discovered, tmp_path_factory):
+def crawled(spark, world, fetcher, discovered, tmp_path_factory):
     root = str(tmp_path_factory.mktemp("lake"))
     cat = LakeCatalog(spark, root)
     job = CrawlJob(
         spark,
         cat,
-        MockFetcher(world["web"]),
+        fetcher,
         world["robots"],
         CrawlConfig(round_seconds=10.0, max_rounds=30, n_bloom_shards=8),
         lens=world["lens"],
@@ -124,7 +128,9 @@ def test_parse_and_canonical_dedup(spark, world, crawled):
     )
 
 
-def test_archive_stage_single_pass_stats(spark, world, crawled, monkeypatch):
+def test_archive_stage_single_pass_stats(
+    spark, world, fetcher, crawled, monkeypatch
+):
     """r3 verdict item 7: archive_stage's tallies must ride the ONE
     write pass (observe on input + written rows) — no parsed-table
     re-read, no cache re-count. Pinned by forbidding DataFrame.count and
@@ -140,7 +146,7 @@ def test_archive_stage_single_pass_stats(spark, world, crawled, monkeypatch):
     exp_parsed = canonical_dedup(parse_pages(ok.select("url", "content"))).count()
 
     job = CrawlJob(
-        spark, cat, MockFetcher(world["web"]), world["robots"],
+        spark, cat, fetcher, world["robots"],
         CrawlConfig(), lens=world["lens"],
     )
 
@@ -186,7 +192,7 @@ def test_image_psnr_invariant(spark, world):
     assert bad.count() == 0
 
 
-def test_follow_links_expands_schedule(spark, world, tmp_path_factory):
+def test_follow_links_expands_schedule(spark, world, fetcher, tmp_path_factory):
     """Link expansion (our scalability extension): start from a few
     seed pages only; parsed links must be admitted, robots-checked,
     seen-filtered and scheduled into LATER rounds (schedule_ext),
@@ -201,7 +207,7 @@ def test_follow_links_expands_schedule(spark, world, tmp_path_factory):
         max_depth=2,
     )
     job = CrawlJob(
-        spark, cat, MockFetcher(world["web"]), world["robots"], cfg,
+        spark, cat, fetcher, world["robots"], cfg,
         lens=world["lens"],
     )
     seeds = world["web"].filter(F.col("url").endswith("/docs/0")).select(
@@ -226,7 +232,7 @@ def test_follow_links_expands_schedule(spark, world, tmp_path_factory):
     assert stats["fetched"] == cache.count()
 
 
-def test_expansion_backfill_heals_crash(spark, world, tmp_path_factory):
+def test_expansion_backfill_heals_crash(spark, world, fetcher, tmp_path_factory):
     """W4 exactly-once for link expansion (ADVICE r2): a crash after the
     round's cache slice commits but before _expand_links runs must NOT
     lose that round's discovered links on resume. Simulated by
@@ -248,7 +254,7 @@ def test_expansion_backfill_heals_crash(spark, world, tmp_path_factory):
     root_a = str(tmp_path_factory.mktemp("lake_exp_a"))
     cat_a = LakeCatalog(spark, root_a)
     job_a = CrawlJob(
-        spark, cat_a, MockFetcher(world["web"]), world["robots"], mk_cfg(),
+        spark, cat_a, fetcher, world["robots"], mk_cfg(),
         lens=world["lens"],
     )
     job_a.init_frontier(seeds_df)
@@ -260,7 +266,7 @@ def test_expansion_backfill_heals_crash(spark, world, tmp_path_factory):
     crash_cfg = mk_cfg()
     crash_cfg.follow_links = False  # models dying inside _expand_links
     job_b = CrawlJob(
-        spark, cat_b, MockFetcher(world["web"]), world["robots"], crash_cfg,
+        spark, cat_b, fetcher, world["robots"], crash_cfg,
         lens=world["lens"],
     )
     job_b.init_frontier(seeds_df)
@@ -270,7 +276,7 @@ def test_expansion_backfill_heals_crash(spark, world, tmp_path_factory):
     # resume: fresh job, follow_links on → backfill must replay round 0's
     # expansion even though current_round() has moved past it
     job_b2 = CrawlJob(
-        spark, cat_b, MockFetcher(world["web"]), world["robots"], mk_cfg(),
+        spark, cat_b, fetcher, world["robots"], mk_cfg(),
         lens=world["lens"],
     )
     job_b2.run()
@@ -283,7 +289,7 @@ def test_expansion_backfill_heals_crash(spark, world, tmp_path_factory):
 
 
 def test_round_without_expandable_pages_skips_expansion(
-    spark, world, tmp_path_factory, monkeypatch
+    spark, world, fetcher, tmp_path_factory, monkeypatch
 ):
     """With max_depth=1 only round 0 (the seeds, depth 0) has pages to
     expand; every later round holds depth-1 pages only. Such a round
@@ -297,7 +303,7 @@ def test_round_without_expandable_pages_skips_expansion(
         follow_links=True, max_depth=1,
     )
     job = CrawlJob(
-        spark, cat, MockFetcher(world["web"]), world["robots"], cfg,
+        spark, cat, fetcher, world["robots"], cfg,
         lens=world["lens"],
     )
     job.init_frontier(
@@ -341,7 +347,9 @@ def test_round_without_expandable_pages_skips_expansion(
     assert sc.statusTracker().getJobIdsForGroup("backfill") == []
 
 
-def test_metrics_bulk_gives_empty_rounds_an_empty_slice(spark, world, tmp_path_factory):
+def test_metrics_bulk_gives_empty_rounds_an_empty_slice(
+    spark, world, fetcher, tmp_path_factory
+):
     """A committed cache round that aggregates to no metrics rows gets
     no partition from the bulk write; stamping ``_SUCCESS`` on it would
     leave a marker-only directory that reads as committed but fails
@@ -349,7 +357,7 @@ def test_metrics_bulk_gives_empty_rounds_an_empty_slice(spark, world, tmp_path_f
     reads back and counts as done: a second backfill runs no job."""
     cat = LakeCatalog(spark, str(tmp_path_factory.mktemp("lake_metrics")))
     job = CrawlJob(
-        spark, cat, MockFetcher(world["web"]), world["robots"],
+        spark, cat, fetcher, world["robots"],
         CrawlConfig(round_seconds=10.0, n_bloom_shards=8),
     )
     job.init_frontier(
@@ -377,7 +385,9 @@ def test_metrics_bulk_gives_empty_rounds_an_empty_slice(spark, world, tmp_path_f
     assert sc.statusTracker().getJobIdsForGroup("metrics-backfill") == []
 
 
-def test_resume_bit_identity(spark, world, discovered, tmp_path_factory):
+def test_resume_bit_identity(
+    spark, world, fetcher, discovered, tmp_path_factory
+):
     """Kill-resume: running rounds 0..1, then resuming a fresh CrawlJob
     over the same catalog, must converge to the same cache/frontier as
     an uninterrupted run (W4)."""
@@ -385,18 +395,18 @@ def test_resume_bit_identity(spark, world, discovered, tmp_path_factory):
 
     root_a = str(tmp_path_factory.mktemp("lake_a"))
     cat_a = LakeCatalog(spark, root_a)
-    job_a = CrawlJob(spark, cat_a, MockFetcher(world["web"]), world["robots"], cfg)
+    job_a = CrawlJob(spark, cat_a, fetcher, world["robots"], cfg)
     job_a.init_frontier(discovered)
     job_a.run()
 
     root_b = str(tmp_path_factory.mktemp("lake_b"))
     cat_b = LakeCatalog(spark, root_b)
-    job_b = CrawlJob(spark, cat_b, MockFetcher(world["web"]), world["robots"], cfg)
+    job_b = CrawlJob(spark, cat_b, fetcher, world["robots"], cfg)
     job_b.init_frontier(discovered)
     for r in range(2):
         job_b.run_round(r)
     # "kill" → new job object over the same catalog (resume path)
-    job_b2 = CrawlJob(spark, cat_b, MockFetcher(world["web"]), world["robots"], cfg)
+    job_b2 = CrawlJob(spark, cat_b, fetcher, world["robots"], cfg)
     job_b2.run()
 
     a = {(r["url"], r["status"]) for r in cat_a.read_slices("cache").collect()}
@@ -407,7 +417,9 @@ def test_resume_bit_identity(spark, world, discovered, tmp_path_factory):
     assert fa == fb
 
 
-def test_sharded_drain_equals_unsharded(spark, world, discovered, crawled, tmp_path):
+def test_sharded_drain_equals_unsharded(
+    spark, world, fetcher, discovered, crawled, tmp_path
+):
     """Partition-and-drain invariance: splitting the frontier across
     rendezvous workers (host-sticky, so per-host politeness state never
     straddles a shard) and draining each shard independently yields
@@ -425,7 +437,7 @@ def test_sharded_drain_equals_unsharded(spark, world, discovered, crawled, tmp_p
         job = CrawlJob(
             spark,
             cat,
-            MockFetcher(world["web"]),
+            fetcher,
             world["robots"],
             CrawlConfig(round_seconds=10.0, max_rounds=30, n_bloom_shards=8),
             lens=world["lens"],
@@ -444,7 +456,7 @@ def test_sharded_drain_equals_unsharded(spark, world, discovered, crawled, tmp_p
 
 
 def test_enqueue_crash_between_bloom_and_append_is_safe(
-    spark, world, tmp_path_factory, monkeypatch
+    spark, world, fetcher, tmp_path_factory, monkeypatch
 ):
     """The enqueue_frontier crash window (r5 review): the bloom folds
     BEFORE the schedule_ext append, so dying between the two leaves a
@@ -464,7 +476,7 @@ def test_enqueue_crash_between_bloom_and_append_is_safe(
     root = str(tmp_path_factory.mktemp("lake_enq_crash"))
     cat = LakeCatalog(spark, root)
     job = CrawlJob(
-        spark, cat, MockFetcher(world["web"]), world["robots"], cfg,
+        spark, cat, fetcher, world["robots"], cfg,
         lens=world["lens"],
     )
     job.init_frontier(seeds_df)
@@ -486,7 +498,7 @@ def test_enqueue_crash_between_bloom_and_append_is_safe(
 
     # resume: a fresh job replays the expansion (no marker was set)
     job2 = CrawlJob(
-        spark, cat, MockFetcher(world["web"]), world["robots"], cfg,
+        spark, cat, fetcher, world["robots"], cfg,
         lens=world["lens"],
     )
     job2.run()
@@ -505,8 +517,41 @@ def test_enqueue_crash_between_bloom_and_append_is_safe(
     assert tagged.filter(~F.col("maybe_seen")).count() == 0
 
 
+def test_expanding_rounds_keep_bloom_snapshots_bounded(
+    spark, world, fetcher, tmp_path_factory
+):
+    """Every expanding round folds its new keys into a full bloom
+    snapshot (n_shards x 128 KiB); the fold is followed by a vacuum, so
+    after any number of expanding rounds ``bloom_shards`` holds at most
+    the last two snapshots on disk."""
+    import os
+
+    cat = LakeCatalog(spark, str(tmp_path_factory.mktemp("lake_bloom_vac")))
+    cfg = CrawlConfig(
+        round_seconds=10.0, n_bloom_shards=8, follow_links=True, max_depth=8,
+    )
+    job = CrawlJob(
+        spark, cat, fetcher, world["robots"], cfg, lens=world["lens"],
+    )
+    job.init_frontier(
+        world["web"].filter(F.col("url").endswith("/docs/0")).select(
+            "url", "host", F.xxhash64("url").alias("url_hash")
+        )
+    )
+    # snapshot 1 is the init build; every later one is an expanding fold
+    r = 0
+    while cat.version("bloom_shards") < 4 and r <= job.max_round():
+        job.run_round(r)
+        r += 1
+    assert cat.version("bloom_shards") - 1 >= 3
+    snaps = [
+        d for d in os.listdir(cat._tdir("bloom_shards")) if d.startswith("snap-")
+    ]
+    assert 1 <= len(snaps) <= 2, snaps
+
+
 def test_init_crash_before_bloom_write_heals_on_resume(
-    spark, world, tmp_path_factory
+    spark, world, fetcher, tmp_path_factory
 ):
     """The init_frontier crash window (r5 review): schedule committed,
     bloom write never ran. Resume must rebuild the bloom (previously it
@@ -522,7 +567,7 @@ def test_init_crash_before_bloom_write_heals_on_resume(
     root = str(tmp_path_factory.mktemp("lake_init_crash"))
     cat = LakeCatalog(spark, root)
     job = CrawlJob(
-        spark, cat, MockFetcher(world["web"]), world["robots"], cfg,
+        spark, cat, fetcher, world["robots"], cfg,
         lens=world["lens"],
     )
     job.init_frontier(seeds_df)
@@ -531,7 +576,7 @@ def test_init_crash_before_bloom_write_heals_on_resume(
     assert not cat.exists("bloom_shards")
 
     job2 = CrawlJob(
-        spark, cat, MockFetcher(world["web"]), world["robots"], cfg,
+        spark, cat, fetcher, world["robots"], cfg,
         lens=world["lens"],
     )
     job2.init_frontier(seeds_df)
@@ -545,44 +590,46 @@ def test_init_crash_before_bloom_write_heals_on_resume(
 
 
 def test_archive_fallback_counts_missing_images_as_failures(
-    spark, world, tmp_path_factory
+    spark, world, colocated_fetcher, tmp_path_factory
 ):
-    """r5 review: the un-stamped fallback image path inner-joined refs
-    to the image store, silently dropping refs whose image is missing
-    — contradicting attach_image_checks' 'missing image is a failure'
-    policy. It must now count them, with per-ref multiplicity."""
+    """An image reference whose image is MISSING from the store is a
+    failure, not a no-image page. The fetch stage stamps such
+    a page image_ok = false, and archive_stage counts it, with per-page
+    multiplicity."""
     from netrunner_spark.images import encode_image, phash64
     import numpy as np
 
-    cfg = CrawlConfig(round_seconds=10.0, max_rounds=5, n_bloom_shards=4)
-    root = str(tmp_path_factory.mktemp("lake_fb_img"))
-    cat = LakeCatalog(spark, root)
-    job = CrawlJob(
-        spark, cat, MockFetcher(world["web"]), world["robots"], cfg,
-        lens=world["lens"],
-    )
-    # hand-build a cache slice WITHOUT the image_ok stamp: 3 rows, two
-    # sharing image 1 (present + valid), one referencing image 99
-    # (missing from the store)
+    # 3 pages: two share image 1 (present + valid), one references
+    # image 99 (missing from the image store)
     arr = np.full((8, 8, 3), 128, dtype=np.uint8)
-    blob = encode_image(arr, "png")
-    ph = phash64(arr)
-    cache = spark.createDataFrame(
+    web = spark.createDataFrame(
         [
-            (1, "https://h.test/a", "h.test", 0, 200, "", "<html>a</html>", 1, 1, "origin"),
-            (2, "https://h.test/b", "h.test", 0, 200, "", "<html>b</html>", 1, 1, "origin"),
-            (3, "https://h.test/c", "h.test", 0, 200, "", "<html>c</html>", 99, 1, "origin"),
+            (f"https://h.test/{p}", "h.test", 200, f"<html>{p}</html>", iid, False)
+            for p, iid in (("a", "img-1"), ("b", "img-1"), ("c", "img-99"))
         ],
-        "url_hash long, url string, host string, depth int, status int,"
-        " headers string, content string, image_id long, attempts int,"
-        " source string",
-    ).withColumn("fetched_round", F.lit(0))
-    cat.append_partitions(cache, "cache", "fetched_round")
-    images = spark.createDataFrame(
-        [(1, blob, 8, 8, ph)],
-        "image_id long, bytes binary, w int, h int, phash long",
+        "url string, host string, status int, content string,"
+        " image_id string, flaky_once boolean",
+    ).withColumn(
+        "headers", F.lit(None).cast("array<struct<name:string,value:string>>")
     )
-    stats = job.archive_stage(images=images)
+    images = spark.createDataFrame(
+        [("img-1", encode_image(arr, "png"), 8, 8, phash64(arr))],
+        "image_id string, bytes binary, w int, h int, phash long",
+    )
+    cfg = CrawlConfig(round_seconds=10.0, max_rounds=5, n_bloom_shards=4)
+    cat = LakeCatalog(spark, str(tmp_path_factory.mktemp("lake_fb_img")))
+    job = CrawlJob(
+        spark, cat, colocated_fetcher(web, images), world["robots"], cfg,
+    )
+    job.init_frontier(web.select("url", "host", F.xxhash64("url").alias("url_hash")))
+    job.run()
+    stamped = {r["url"]: r["image_ok"] for r in job.cache_df().collect()}
+    assert stamped == {
+        "https://h.test/a": True,
+        "https://h.test/b": True,
+        "https://h.test/c": False,
+    }
+    stats = job.archive_stage()
     assert stats["images_checked"] == 3   # every ref row counted
     assert stats["image_failures"] == 1   # the missing image
 

@@ -241,14 +241,13 @@ def test_apply_template_caps_cap_exceeds_group(spark):
 
 
 # -------------------------------------------- health -> politeness loop
-def test_health_feeds_politeness_budgets_e2e(spark):
+def test_health_feeds_politeness_budgets_e2e(spark, colocated_fetcher):
     """The adaptive-politeness loop closed end to end: the REAL fetch
     surface (MockFetcher over a synthetic web with one all-5xx host)
     produces the fetch log, host_health turns it into per-host delays,
     and politeness.host_budgets hands the sick host proportionally
     fewer slots in the next scheduling round."""
     from netrunner_spark.operators import politeness
-    from netrunner_spark.sources.fetcher import MockFetcher
     from netrunner_spark.synth import gen_web, host_name
     from netrunner_spark.urlnorm import url_hash_col
 
@@ -263,7 +262,7 @@ def test_health_feeds_politeness_budgets_e2e(spark):
     frontier = web.select(
         "url", "host", url_hash_col("url").alias("url_hash")
     ).withColumn("depth", F.lit(0))
-    res = MockFetcher(web).fetch(frontier)
+    res = colocated_fetcher(web).fetch(frontier)
     log = res.select(
         "host",
         F.coalesce(F.col("status"), F.lit(0)).alias("status"),
@@ -423,7 +422,7 @@ def test_k_core_empty_when_k_exceeds_graph(spark):
 
 
 # ------------------------------------------------------------ drift loop
-def test_drift_loop_reallocates_recrawl_budget(spark):
+def test_drift_loop_reallocates_recrawl_budget(spark, colocated_fetcher):
     """E2E through the engine path: fetch round A (MockFetcher) →
     parse (X2) → fetch round B after two hosts roll out a template
     rewrite → parse → source_drift over the two parsed corpora keyed
@@ -433,7 +432,6 @@ def test_drift_loop_reallocates_recrawl_budget(spark):
     from netrunner_spark.operators.crawlintel import budget_alloc
     from netrunner_spark.operators.textops import source_drift
     from netrunner_spark.parser.udf import parse_pages
-    from netrunner_spark.sources.fetcher import MockFetcher
     from netrunner_spark.synth import gen_web
     from netrunner_spark.urlnorm import url_hash_col
 
@@ -448,7 +446,7 @@ def test_drift_loop_reallocates_recrawl_budget(spark):
     )
 
     def corpus(web):
-        fetched = MockFetcher(web).fetch(
+        fetched = colocated_fetcher(web).fetch(
             web.select(
                 "url", "host", url_hash_col("url").alias("url_hash")
             ),

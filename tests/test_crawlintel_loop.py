@@ -9,7 +9,6 @@ from pyspark.sql import functions as F
 
 from netrunner_spark.operators import crawlintel
 from netrunner_spark.plans.crawl import CrawlConfig, CrawlJob
-from netrunner_spark.sources.fetcher import MockFetcher
 from netrunner_spark.synth import gen_robots, gen_web, host_name
 from netrunner_spark.tables import LakeCatalog
 from netrunner_spark.urlnorm import url_hash_col
@@ -37,11 +36,11 @@ def _planted_web(spark):
     return base.unionByName(mirror).unionByName(trap)
 
 
-def test_cache_to_intelligence_to_budget_loop(spark, tmp_path):
+def test_cache_to_intelligence_to_budget_loop(spark, colocated_fetcher, tmp_path):
     web = _planted_web(spark)
     robots = gen_robots(spark, 3)
     cat = LakeCatalog(spark, str(tmp_path / "lake"))
-    job = CrawlJob(spark, cat, MockFetcher(web), robots, CrawlConfig())
+    job = CrawlJob(spark, cat, colocated_fetcher(web), robots, CrawlConfig())
     job.init_frontier(web.select("url", "host", url_hash_col("url").alias("url_hash")))
     stats = job.run()
     assert stats["fetched"] > 0

@@ -1,17 +1,9 @@
 """Regressions for the eleventh review batch (crawl-core second
-opinion: rank_round stride, streaming-only enqueue, bloom occupancy,
-image-verdict join shape)."""
+opinion: rank_round stride, streaming-only enqueue, bloom occupancy)."""
 
 from pyspark.sql import functions as F
 
 from netrunner_spark.operators.politeness import rank_round
-
-
-def _explain(df):
-    sc = df.sparkSession.sparkContext
-    return sc._jvm.PythonSQLUtils.explainString(  # type: ignore[attr-defined]
-        df._jdf.queryExecution(), "formatted"
-    )
 
 
 def test_rank_round_honors_stride(spark):
@@ -40,13 +32,12 @@ def test_rank_round_honors_stride(spark):
     assert "stride" not in out.columns and "budget" not in out.columns
 
 
-def test_enqueue_before_init_streaming_only(spark, tmp_path):
+def test_enqueue_before_init_streaming_only(spark, colocated_fetcher, tmp_path):
     """The streaming→batch handoff entry point must work on a FRESH
     catalog (no seed list, init_frontier never called) — it used to
     raise FileNotFoundError on the missing schedule table, and no
     bloom was ever created in that mode."""
     from netrunner_spark.plans.crawl import CrawlConfig, CrawlJob
-    from netrunner_spark.sources.fetcher import MockFetcher
     from netrunner_spark.synth import gen_robots, gen_web
     from netrunner_spark.tables import LakeCatalog
 
@@ -55,7 +46,7 @@ def test_enqueue_before_init_streaming_only(spark, tmp_path):
     job = CrawlJob(
         spark,
         cat,
-        MockFetcher(web),
+        colocated_fetcher(web),
         gen_robots(spark, 2),
         CrawlConfig(round_seconds=10.0, max_rounds=10, n_bloom_shards=4),
     )
@@ -85,17 +76,3 @@ def test_bloom_bits_set_replay_stable(spark):
     for sid in s1:
         assert s2[sid][0] == s1[sid][0]  # bits_set unchanged by replay
         assert s2[sid][1] > s1[sid][1]  # the raw counter inflates (documented)
-
-
-def test_image_verdict_join_avoids_sort_merge_when_not_broadcast(spark):
-    """prefer_broadcast=False must shuffle-hash BOTH image joins — an
-    un-hinted verdicts join sort-merge-joined, sorting the
-    content-heavy fetched side at exactly the big-round scale."""
-    from netrunner_spark.plans.crawl import attach_image_checks
-    from netrunner_spark.synth import gen_images, gen_pair_web
-
-    web = gen_pair_web(spark, 2, 20)
-    images = gen_images(spark, 2, 20, dense=True)
-    out = attach_image_checks(web, images, prefer_broadcast=False)
-    plan = _explain(out)
-    assert "SortMergeJoin" not in plan

@@ -452,3 +452,39 @@ def test_null_status_when_body_read_fails(spark, server):
     assert row["status"] is None
     assert row["content"] is None
     assert row["attempts"] == 3  # full retry budget consumed
+
+
+def test_crawl_job_drives_http_fetcher(spark, server, tmp_path):
+    """A CrawlJob round through HttpFetcher: the batch comes from the
+    bucketed ``schedule`` (HttpFetcher joins no store) and lands in the
+    cache slice with the fetcher's statuses and attempt counts."""
+    from netrunner_spark.plans.crawl import CrawlConfig, CrawlJob
+    from netrunner_spark.synth import gen_robots
+    from netrunner_spark.tables import LakeCatalog
+
+    for p in ("/ok", "/gone", "/flaky"):
+        _Handler.hits.pop(p, None)
+    urls = spark.createDataFrame(
+        [(f"{server}{p}", "127.0.0.1") for p in ("/ok", "/gone", "/flaky")],
+        "url string, host string",
+    ).withColumn("url_hash", F.xxhash64("url"))
+    cat = LakeCatalog(spark, str(tmp_path / "lake"))
+    # robots rules for host0.test only: 127.0.0.1 is allowed, with the
+    # default budget of round_seconds x rps = 20 slots in round 0
+    job = CrawlJob(
+        spark, cat, HttpFetcher(rps=100.0), gen_robots(spark, 1),
+        CrawlConfig(n_bloom_shards=4),
+    )
+    job.init_frontier(urls)
+    assert job.cat.table_meta("schedule")["n_buckets"] == job.cfg.colocated_buckets
+    assert job.run_round(0) == 3
+    got = {
+        r["url"].rsplit("/", 1)[1]: (r["status"], r["attempts"], r["source"])
+        for r in cat.read_slice("cache", "fetched_round", 0).collect()
+    }
+    assert got == {
+        "ok": (200, 1, "origin"),
+        "gone": (404, 1, "origin"),  # terminal, never retried
+        "flaky": (200, 2, "origin"),  # 429 + Retry-After, then success
+    }
+    assert _Handler.hits["/gone"] == 1

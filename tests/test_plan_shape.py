@@ -9,7 +9,6 @@ import pytest
 from pyspark.sql import functions as F
 
 from netrunner_spark.plans.crawl import CACHE_COLS, CrawlConfig, CrawlJob
-from netrunner_spark.sources.fetcher import MockFetcher
 from netrunner_spark.synth import gen_images, gen_robots, gen_web
 from netrunner_spark.tables import LakeCatalog
 from netrunner_spark.urlnorm import url_hash_col
@@ -20,6 +19,13 @@ def _explain(df, mode: str = "formatted") -> str:
     return sc._jvm.PythonSQLUtils.explainString(  # type: ignore[attr-defined]
         df._jdf.queryExecution(), mode
     )
+
+
+def _hash_exchange(df) -> bool:
+    """True if the plan hash-partitions any input. The formatted explain
+    prints an exchange and its partitioning on separate lines, so look
+    for both on one line of the one-line-per-node form."""
+    return "Exchange hashpartitioning" in _explain(df, "simple")
 
 
 PY_NODES = (
@@ -75,16 +81,15 @@ def _ran_python_nodes(spark, description: str) -> list[tuple[str, str, list]]:
 
 
 @pytest.fixture(scope="module")
-def drained(spark, tmp_path_factory):
+def drained(spark, colocated_fetcher, tmp_path_factory):
     web = gen_web(spark, 3, 30).cache()
     cat = LakeCatalog(spark, str(tmp_path_factory.mktemp("plan_lake")))
     job = CrawlJob(
         spark,
         cat,
-        MockFetcher(web),
+        colocated_fetcher(web, gen_images(spark, 3, 30)),
         gen_robots(spark, 3),
         CrawlConfig(n_bloom_shards=8),
-        images=gen_images(spark, 3, 30),
     )
     job.init_frontier(web.select("url", "host", url_hash_col("url").alias("url_hash")))
     job.run_round(0)
@@ -92,28 +97,21 @@ def drained(spark, tmp_path_factory):
 
 
 def test_fetch_join_broadcasts_small_batch(drained):
-    """The round batch must broadcast into the store scan — a sort-merge
-    join here would shuffle the 10^10-row store every round."""
+    """A small round batch broadcasts over the bucketed store scan — no
+    sort-merge startup, and the store never shuffles."""
     job = drained["job"]
     batch = job._round_batch(1)
-    plan = _explain(MockFetcher(drained["web"]).fetch(batch, prefer_broadcast=True))
+    fetched = job.fetcher.fetch(batch, prefer_broadcast=True)
+    plan = _explain(fetched)
     assert "BroadcastHashJoin" in plan
     assert "SortMergeJoin" not in plan
-
-
-def test_fetch_join_shuffles_when_told(drained):
-    job = drained["job"]
-    batch = job._round_batch(1)
-    plan = _explain(MockFetcher(drained["web"]).fetch(batch, prefer_broadcast=False))
-    assert "ShuffledHashJoin" in plan
+    assert not _hash_exchange(fetched)
 
 
 def test_schedule_read_is_partition_pruned(drained):
-    """Reading round r's batch must touch only sched_round=r (direct
-    path read — no filter, no full-table listing)."""
-    cat = drained["cat"]
-    df = cat.read_partition("schedule", "sched_round", 1)
-    files = df.inputFiles()
+    """Reading round r's batch must touch only sched_round=r (the
+    partition predicate prunes the bucketed table at plan time)."""
+    files = drained["job"]._round_batch(1).inputFiles()
     assert files and all("sched_round=1" in f for f in files)
 
 
@@ -131,71 +129,58 @@ def test_metrics_scan_prunes_content(drained):
     assert read_schema and all("content" not in ln for ln in read_schema)
 
 
-def test_colocated_round_has_no_broadcast_and_no_shuffle(spark, tmp_path_factory):
+def test_colocated_round_has_no_broadcast_and_no_shuffle(
+    spark, colocated_fetcher, tmp_path_factory, monkeypatch
+):
     """The round-3 serial-floor fix (VERDICT r2 #1): with the store,
     image payloads and schedule all bucketed on url_hash, the ENTIRE
     round pipeline — fetch join, miss anti-join, inline image
-    decode+validate — is a co-located merge join: NO BroadcastExchange
-    (no driver-serial hash-relation build) and NO shuffle exchange.
-    Results must equal the broadcast path's bit-for-bit."""
-    from netrunner_spark.sources.fetcher import prepare_colocated_fetcher
+    decode+validate — is exchange-free. A round above the broadcast
+    byte cap is a co-located merge join: NO BroadcastExchange (no
+    driver-serial hash-relation build) and NO shuffle exchange. A small
+    round broadcasts over the bucketed scan, still with no shuffle.
+    Both must give identical cache rows."""
+    from netrunner_spark.plans import crawl as crawl_mod
     from netrunner_spark.synth import gen_pair_web
 
     web = gen_pair_web(spark, 3, 30).cache()
     images = gen_images(spark, 3, 30, dense=True).cache()
     robots = gen_robots(spark, 3)
     seeds = web.select("url", "host", url_hash_col("url").alias("url_hash"))
+    fetcher = colocated_fetcher(web, images)
 
-    cat = LakeCatalog(spark, str(tmp_path_factory.mktemp("plan_lake_colo")))
-    fetcher = prepare_colocated_fetcher(cat, web, images, n_buckets=8)
-    job = CrawlJob(
-        spark, cat, fetcher, robots,
-        CrawlConfig(n_bloom_shards=8, colocated_buckets=8),
-    )
+    cat = LakeCatalog(spark, str(tmp_path_factory.mktemp("plan_lake_small")))
+    job = CrawlJob(spark, cat, fetcher, robots, CrawlConfig(n_bloom_shards=8))
     job.init_frontier(seeds)
 
     batch = job._round_batch(0)
-    # big-batch path (the at-scale default, prefer_broadcast unset):
-    # co-located merge join — NO broadcast build, NO shuffle
-    plan = _explain(fetcher.fetch(batch))
-    assert "BroadcastExchange" not in plan
-    assert "Exchange hashpartitioning" not in plan
+    # big-batch path: co-located merge join — NO broadcast build, NO
+    # shuffle
+    merged = fetcher.fetch(batch, prefer_broadcast=False)
+    assert "BroadcastExchange" not in _explain(merged)
+    assert not _hash_exchange(merged)
     # small-batch path: broadcast OVER the bucketed scan — still no
     # shuffle, but no store-wide merge-sort startup either
-    plan_bc = _explain(fetcher.fetch(batch, prefer_broadcast=True))
-    assert "BroadcastHashJoin" in plan_bc
-    assert "Exchange hashpartitioning" not in plan_bc
-    # both plans must produce identical rows
-    a = {tuple(r) for r in fetcher.fetch(batch).select("url", "status").collect()}
-    b = {
-        tuple(r)
-        for r in fetcher.fetch(batch, prefer_broadcast=True)
-        .select("url", "status")
-        .collect()
-    }
-    assert a == b
+    broadcast = fetcher.fetch(batch, prefer_broadcast=True)
+    assert "BroadcastHashJoin" in _explain(broadcast)
+    assert not _hash_exchange(broadcast)
     # the schedule read prunes to the round's partition
     files = batch.inputFiles()
     assert files and all("sched_round=0" in f for f in files)
 
-    # end-to-end equivalence vs the broadcast-mode drain
+    # end to end: every round of this drain is below the byte cap and
+    # broadcasts; with the cap at 0 every round takes the merge path
     job.run()
-    cat_b = LakeCatalog(spark, str(tmp_path_factory.mktemp("plan_lake_bc")))
-    job_b = CrawlJob(
-        spark, cat_b, MockFetcher(web), robots,
-        CrawlConfig(n_bloom_shards=8), images=images,
-    )
-    job_b.init_frontier(seeds)
-    job_b.run()
-    a = {
-        (r["url"], r["status"], r["image_ok"], r["image_phash"])
-        for r in cat.read_slices("cache").collect()
-    }
-    b = {
-        (r["url"], r["status"], r["image_ok"], r["image_phash"])
-        for r in cat_b.read_slices("cache").collect()
-    }
+    monkeypatch.setattr(crawl_mod, "BROADCAST_BATCH_BYTES", 0)
+    cat_m = LakeCatalog(spark, str(tmp_path_factory.mktemp("plan_lake_merge")))
+    job_m = CrawlJob(spark, cat_m, fetcher, robots, CrawlConfig(n_bloom_shards=8))
+    job_m.init_frontier(seeds)
+    job_m.run()
+    cols = ["url", "status", "attempts", "image_ok", "image_phash"]
+    a = {tuple(r) for r in cat.read_slices("cache").select(*cols).collect()}
+    b = {tuple(r) for r in cat_m.read_slices("cache").select(*cols).collect()}
     assert a == b
+    assert any(r[3] is True for r in a)  # images really were validated
 
 
 def test_robots_verdict_is_shuffle_free(spark, drained):
@@ -215,20 +200,16 @@ def test_robots_verdict_is_shuffle_free(spark, drained):
 
 
 def test_cache_write_plan_has_no_shuffle(drained):
-    """The round's cache pipeline (fetch + image verdicts) is exchange-
-    free up to the write: broadcasts only, content rows never shuffle."""
-    from netrunner_spark.plans.crawl import attach_image_checks
-
+    """The round's cache pipeline (fetch + inline image verdicts) is
+    exchange-free up to the write on both join paths: content rows
+    never shuffle."""
     job = drained["job"]
     batch = job._round_batch(1)
-    fetcher = job.fetcher
-    fetched = fetcher.fetch(batch, prefer_broadcast=True).select(*CACHE_COLS)
-    full = attach_image_checks(
-        fetched, job.images, prefer_broadcast=True,
-        refs=fetcher.image_refs(batch, prefer_broadcast=True),
-    )
-    plan = _explain(full)
-    assert "Exchange hashpartitioning" not in plan
+    for small in (True, False):
+        full = job.fetcher.fetch(batch, prefer_broadcast=small).select(
+            *CACHE_COLS, "image_ok", "image_phash"
+        )
+        assert not _hash_exchange(full), small
 
 
 def test_round5_operator_plan_shapes(spark):
@@ -487,7 +468,9 @@ def test_graph_family_plan_shapes(spark):
     assert "partial" in plan.lower()
 
 
-def test_expanding_enqueue_runs_each_python_pass_once(spark, tmp_path_factory):
+def test_expanding_enqueue_runs_each_python_pass_once(
+    spark, colocated_fetcher, tmp_path_factory
+):
     """A round that expands links runs three Python nodes, each once:
     the link parse, the normalize + host pass and the bloom probe (plus
     the bloom fold of the write). None may be re-evaluated in a filter
@@ -497,7 +480,7 @@ def test_expanding_enqueue_runs_each_python_pass_once(spark, tmp_path_factory):
     web = gen_web(spark, 3, 30).cache()
     cat = LakeCatalog(spark, str(tmp_path_factory.mktemp("plan_lake_expand")))
     job = CrawlJob(
-        spark, cat, MockFetcher(web), gen_robots(spark, 3),
+        spark, cat, colocated_fetcher(web), gen_robots(spark, 3),
         CrawlConfig(n_bloom_shards=8, follow_links=True, max_depth=3),
     )
     job.init_frontier(

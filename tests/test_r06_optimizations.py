@@ -253,9 +253,8 @@ def test_cc_local_unionfind_matches_distributed(spark):
     assert local == dist and len(local) == 100
 
 
-def test_bulk_metrics_match_per_round_recompute(spark, tmp_path):
+def test_bulk_metrics_match_per_round_recompute(spark, colocated_fetcher, tmp_path):
     from netrunner_spark.plans.crawl import CrawlConfig, CrawlJob
-    from netrunner_spark.sources.fetcher import MockFetcher
     from netrunner_spark.synth import gen_robots, gen_web
     from netrunner_spark.tables import LakeCatalog
     from netrunner_spark.urlnorm import url_hash_col
@@ -265,7 +264,7 @@ def test_bulk_metrics_match_per_round_recompute(spark, tmp_path):
     job = CrawlJob(
         spark,
         cat,
-        MockFetcher(web),
+        colocated_fetcher(web),
         gen_robots(spark, 4),
         CrawlConfig(rps=2.0, round_seconds=6.0),
     )

@@ -10,15 +10,14 @@ from pyspark.sql import functions as F
 
 from netrunner_spark.operators import retrieval
 from netrunner_spark.plans.crawl import CrawlConfig, CrawlJob
-from netrunner_spark.sources.fetcher import MockFetcher
 from netrunner_spark.synth import gen_robots, gen_web, host_name
 from netrunner_spark.tables import LakeCatalog
 from netrunner_spark.urlnorm import url_hash_col
 
 
-def _crawl_docs(spark, web, lake):
+def _crawl_docs(spark, web, fetcher, lake):
     cat = LakeCatalog(spark, lake)
-    job = CrawlJob(spark, cat, MockFetcher(web), gen_robots(spark, 3), CrawlConfig())
+    job = CrawlJob(spark, cat, fetcher, gen_robots(spark, 3), CrawlConfig())
     job.init_frontier(web.select("url", "host", url_hash_col("url").alias("url_hash")))
     assert job.run()["fetched"] > 0
     return (
@@ -31,9 +30,11 @@ def _crawl_docs(spark, web, lake):
     )
 
 
-def test_recrawl_delta_updates_index_exactly(spark, tmp_path):
+def test_recrawl_delta_updates_index_exactly(spark, colocated_fetcher, tmp_path):
     web1 = gen_web(spark, 3, 18)
-    docs1 = _crawl_docs(spark, web1, str(tmp_path / "lake1"))
+    docs1 = _crawl_docs(
+        spark, web1, colocated_fetcher(web1), str(tmp_path / "lake1")
+    )
 
     cat = LakeCatalog(spark, str(tmp_path / "idx"))
     idx = retrieval.SearchIndex(cat, "ri")
@@ -47,7 +48,9 @@ def test_recrawl_delta_updates_index_exactly(spark, tmp_path):
             F.concat(F.col("content"), F.lit(" zzupdatedterm zzupdatedterm")),
         ).otherwise(F.col("content")),
     )
-    docs2 = _crawl_docs(spark, web2, str(tmp_path / "lake2"))
+    docs2 = _crawl_docs(
+        spark, web2, colocated_fetcher(web2), str(tmp_path / "lake2")
+    )
 
     # the recrawl delta: docs whose content hash changed (or are new)
     h1 = docs1.select("doc_id", F.md5("text").alias("h1"))

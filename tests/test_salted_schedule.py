@@ -55,9 +55,8 @@ def test_salts_capped_by_budget(spark):
     assert sched.count() == 15
 
 
-def test_crawl_with_salted_schedule(spark, tmp_path):
+def test_crawl_with_salted_schedule(spark, colocated_fetcher, tmp_path):
     from netrunner_spark.plans.crawl import CrawlConfig, CrawlJob
-    from netrunner_spark.sources.fetcher import MockFetcher
     from netrunner_spark.synth import gen_robots, gen_web
     from netrunner_spark.tables import LakeCatalog
     from netrunner_spark.urlnorm import url_hash_col
@@ -67,7 +66,7 @@ def test_crawl_with_salted_schedule(spark, tmp_path):
     job = CrawlJob(
         spark,
         cat,
-        MockFetcher(web),
+        colocated_fetcher(web),
         gen_robots(spark, 3),
         CrawlConfig(n_bloom_shards=8, schedule_salts=4),
     )

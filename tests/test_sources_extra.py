@@ -68,15 +68,14 @@ def test_lens_roundtrip_and_folder_lens():
     ]
 
 
-def test_dual_source_fallback(spark):
+def test_dual_source_fallback(spark, colocated_fetcher):
     """S9: origin-404 pages with an IA snapshot are recovered via the
     archive side; source column records which side served."""
-    from netrunner_spark.sources.fetcher import MockFetcher
     from netrunner_spark.synth import gen_web
 
     web = gen_web(spark, 1, 40)  # page i=9 (i%31==9): origin 404, ia 200
     batch = web.select("url", F.xxhash64("url").alias("url_hash"))
-    out = MockFetcher(web).fetch(batch)
+    out = colocated_fetcher(web).fetch(batch)
     rescued = out.filter(F.col("url").endswith("/9")).collect()[0]
     assert rescued["status"] == 200
     assert rescued["source"] == "archive"

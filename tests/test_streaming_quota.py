@@ -68,20 +68,20 @@ def test_stateful_quota_across_batches(spark, tmp_path):
     assert int(c_rows["admitted"].sum()) == 2  # fresh bucket: burst=2
 
 
-def test_streaming_to_batch_handoff(spark, tmp_path):
+def test_streaming_to_batch_handoff(spark, colocated_fetcher, tmp_path):
     """VERDICT r2 #10: quota-ADMITTED rows flow into schedule_ext and
     the drain fetches exactly the admitted set once; deferred rows never
     reach the drain; a replayed handoff is a no-op (seen guard)."""
     from netrunner_spark.plans.crawl import CrawlConfig, CrawlJob
-    from netrunner_spark.sources.fetcher import MockFetcher
     from netrunner_spark.synth import gen_robots, gen_web
     from netrunner_spark.tables import LakeCatalog
 
     web = gen_web(spark, 2, 20).cache()
     robots = gen_robots(spark, 2)
+    fetcher = colocated_fetcher(web)
     cat = LakeCatalog(spark, str(tmp_path / "lake"))
     job = CrawlJob(
-        spark, cat, MockFetcher(web), robots,
+        spark, cat, fetcher, robots,
         CrawlConfig(max_rounds=40, n_bloom_shards=8),
     )
     seeds = web.filter(F.col("url").endswith("/docs/0")).select(
@@ -126,7 +126,9 @@ def test_streaming_to_batch_handoff(spark, tmp_path):
     assert ext.filter(F.col("sched_round") > before).count() == 0
 
 
-def test_engine_requeues_deferred_rows_no_producer_retry(spark, tmp_path):
+def test_engine_requeues_deferred_rows_no_producer_retry(
+    spark, colocated_fetcher, tmp_path
+):
     """VERDICT r4 #7: an over-quota wave must drain FULLY across later
     cycles with ZERO producer resubmissions — micro_batch_cycle routes
     deferred rows back into the candidate input itself with a
@@ -134,15 +136,15 @@ def test_engine_requeues_deferred_rows_no_producer_retry(spark, tmp_path):
     the handoff marker makes each cycle O(new-files), not O(history).
     Exactly-once holds across a restart between cycles."""
     from netrunner_spark.plans.crawl import CrawlConfig, CrawlJob
-    from netrunner_spark.sources.fetcher import MockFetcher
     from netrunner_spark.synth import gen_robots, gen_web
     from netrunner_spark.tables import LakeCatalog
 
     web = gen_web(spark, 1, 30).cache()
     robots = gen_robots(spark, 1)
+    fetcher = colocated_fetcher(web)
     cat = LakeCatalog(spark, str(tmp_path / "lake"))
     cfg = CrawlConfig(max_rounds=60, n_bloom_shards=8)
-    job = CrawlJob(spark, cat, MockFetcher(web), robots, cfg)
+    job = CrawlJob(spark, cat, fetcher, robots, cfg)
     seeds = web.filter(F.col("url").endswith("/docs/0")).select(
         "url", "host", F.xxhash64("url").alias("url_hash")
     )
@@ -171,7 +173,7 @@ def test_engine_requeues_deferred_rows_no_producer_retry(spark, tmp_path):
     # RESTART mid-backlog: fresh CrawlJob, same catalog + checkpoint.
     # The requeued rows (event-time bumped to the next token-feasible
     # slots) drain WITHOUT any producer retry.
-    job2 = CrawlJob(spark, cat, MockFetcher(web), robots, cfg)
+    job2 = CrawlJob(spark, cat, fetcher, robots, cfg)
     job2.init_frontier(seeds)
     s2 = micro_batch_cycle(spark, in_dir, out_dir, ckpt, job2, rps=1.0, burst=2.0)
     assert s2["admitted"] == 6 and s2["deferred"] == 0
@@ -187,7 +189,9 @@ def test_engine_requeues_deferred_rows_no_producer_retry(spark, tmp_path):
     assert cat.read_slices("cache").count() == n_seeds + 8
 
 
-def test_continuous_frontend_three_waves_with_restart(spark, tmp_path):
+def test_continuous_frontend_three_waves_with_restart(
+    spark, colocated_fetcher, tmp_path
+):
     """VERDICT r3 #8: the continuous micro-batch loop — three waves of
     candidates stream through quota → handoff → drain while earlier
     waves' rows sit in the cache, with a simulated process RESTART
@@ -196,15 +200,15 @@ def test_continuous_frontend_three_waves_with_restart(spark, tmp_path):
     is fetched exactly once, wave-1 deferred URLs are fetched only after
     re-submission admits them, and nothing is ever fetched twice."""
     from netrunner_spark.plans.crawl import CrawlConfig, CrawlJob
-    from netrunner_spark.sources.fetcher import MockFetcher
     from netrunner_spark.synth import gen_robots, gen_web
     from netrunner_spark.tables import LakeCatalog
 
     web = gen_web(spark, 2, 30).cache()
     robots = gen_robots(spark, 2)
+    fetcher = colocated_fetcher(web)
     cat = LakeCatalog(spark, str(tmp_path / "lake"))
     cfg = CrawlConfig(max_rounds=60, n_bloom_shards=8)
-    job = CrawlJob(spark, cat, MockFetcher(web), robots, cfg)
+    job = CrawlJob(spark, cat, fetcher, robots, cfg)
     seeds = web.filter(F.col("url").endswith("/docs/0")).select(
         "url", "host", F.xxhash64("url").alias("url_hash")
     )
@@ -252,7 +256,7 @@ def test_continuous_frontend_three_waves_with_restart(spark, tmp_path):
 
     # RESTART: a fresh CrawlJob over the same catalog resumes from the
     # committed slices; its bare run() is a no-op (nothing scheduled)
-    job2 = CrawlJob(spark, cat, MockFetcher(web), robots, cfg)
+    job2 = CrawlJob(spark, cat, fetcher, robots, cfg)
     job2.init_frontier(seeds)  # no-op: schedule exists (W4)
     job2.run()
     assert cat.read_slices("cache").count() == n_seeds + 7

@@ -8,24 +8,30 @@ from __future__ import annotations
 
 import time
 
+import pytest
 from pyspark.sql import functions as F
 
 from netrunner_spark.plans.crawl import CrawlConfig, CrawlJob
-from netrunner_spark.sources.fetcher import MockFetcher
 from netrunner_spark.synth import gen_robots, gen_web
 from netrunner_spark.tables import LakeCatalog
 from netrunner_spark.urlnorm import url_hash_col
 
 
+@pytest.fixture(scope="module")
+def store(spark, colocated_fetcher):
+    web = gen_web(spark, 2, 12).cache()
+    return web, colocated_fetcher(web)
+
+
 def _drain(
-    spark, tmp_path, enforce: bool, round_seconds: float = 2.0
+    spark, store, tmp_path, enforce: bool, round_seconds: float = 2.0
 ) -> tuple[float, int]:
-    web = gen_web(spark, 2, 12)
+    web, fetcher = store
     cat = LakeCatalog(spark, str(tmp_path / f"lake_{enforce}"))
     job = CrawlJob(
         spark,
         cat,
-        MockFetcher(web),
+        fetcher,
         gen_robots(spark, 2),
         CrawlConfig(
             # keep the per-round budget (rps × round_seconds) fixed at 4
@@ -42,14 +48,14 @@ def _drain(
     return time.time() - t0, stats["rounds"]
 
 
-def test_wall_clock_paces_rounds(spark, tmp_path):
-    dt, rounds = _drain(spark, tmp_path, enforce=True)
+def test_wall_clock_paces_rounds(spark, store, tmp_path):
+    dt, rounds = _drain(spark, store, tmp_path, enforce=True)
     assert rounds >= 2
     # every round but the last must occupy its full window
     assert dt >= 2.0 * (rounds - 1)
 
 
-def test_logical_mode_does_not_sleep(spark, tmp_path):
+def test_logical_mode_does_not_sleep(spark, store, tmp_path):
     # a tiny drain's compute is well under the window; without
     # enforcement it must not sleep the windows out. round_seconds is
     # deliberately huge (30 s/round) so that on this VM's documented
@@ -57,7 +63,7 @@ def test_logical_mode_does_not_sleep(spark, tmp_path):
     # bound from compute alone — the assert can only fail if the code
     # actually slept the windows (review finding r4: the old 2 s bound
     # flaked under steal).
-    dt, rounds = _drain(spark, tmp_path, enforce=False, round_seconds=30.0)
+    dt, rounds = _drain(spark, store, tmp_path, enforce=False, round_seconds=30.0)
     assert rounds >= 2
     assert dt < 30.0 * (rounds - 1)
 
@@ -99,11 +105,12 @@ def test_crawl_delay_exceeding_round_gets_stride(spark):
     assert rounds["fast.test"] == [0] * 10 + [1] * 10 + [2] * 5  # dense
 
 
-def test_default_budget_follows_configured_rate(spark, tmp_path):
+def test_default_budget_follows_configured_rate(
+    spark, colocated_fetcher, tmp_path
+):
     """r5 review: hosts with no robots row used to fall through to a
     hardcoded 20 slots/round; they must follow round_seconds x rps."""
     from netrunner_spark.plans.crawl import CrawlConfig, CrawlJob
-    from netrunner_spark.sources.fetcher import MockFetcher
     from netrunner_spark.tables import LakeCatalog
     from netrunner_spark.urlnorm import url_hash_col
 
@@ -118,7 +125,7 @@ def test_default_budget_follows_configured_rate(spark, tmp_path):
     cfg = CrawlConfig(rps=0.5, round_seconds=10.0, n_bloom_shards=4)
     job = CrawlJob(
         spark, LakeCatalog(spark, str(tmp_path / "lake")),
-        MockFetcher(web), robots, cfg,
+        colocated_fetcher(web), robots, cfg,
     )
     assert job._default_budget() == 5  # floor(10 x 0.5)
     job.init_frontier(
