@@ -455,7 +455,7 @@ def cpu_leg(cores: int) -> dict:
     sys.path.insert(0, REPO)
     from pyspark.sql import functions as F
 
-    from netrunner_spark.parser.udf import parse_html_udf
+    from netrunner_spark.parser.udf import make_parse_udf
     from netrunner_spark.session import get_spark
 
     repeats = int(os.environ.get("SCALE_REPEATS", "3"))
@@ -470,7 +470,7 @@ def cpu_leg(cores: int) -> dict:
     best = None
     for rep in range(repeats):
         t0 = time.time()
-        parsed = df.select(parse_html_udf("url", "content").alias("p"))
+        parsed = df.select(make_parse_udf()("url", "content").alias("p"))
         row = parsed.select(
             F.count("p.content_hash").alias("n"),
             F.sum(F.length("p.content")).alias("chars"),

@@ -29,18 +29,6 @@ from pyspark.sql import functions as F
 DEFAULT_RPS = 2.0  # reference hard-codes 2 req/s/domain (mod.rs:133,150)
 
 
-def robots_match_expr(url_col, pattern_col):
-    """True iff robots path_pattern matches the URL's path.
-
-    Supports '*' wildcards and '$' end-anchor per REP, JVM-side.
-    Delegates the escape/anchor rewrite to :func:`_pattern_matches`
-    (the copy `robots_allowed` uses) so the REP rewrite chain exists
-    exactly once (r5 review: the two copies could silently drift)."""
-    path = F.regexp_replace(url_col, r"^[a-z]+://[^/]+", "")
-    path = F.when(path == "", "/").otherwise(path)
-    return _pattern_matches(path, pattern_col)
-
-
 def robots_allowed(frontier: DataFrame, robots: DataFrame) -> DataFrame:
     """frontier(url, host, ...) × robots(host, directive, path_pattern)
     → frontier rows the crawler may fetch.

@@ -6,7 +6,8 @@ node. Our design (north_rule): a bloom filter sharded by
 ``shard_id = pmod(url_hash, n_shards)`` — stable under repartitioning —
 whose shards are built/merged per round in ``applyInPandas`` (numpy
 bitsets, Arrow transfer) and checkpointed to the lake as rows
-``(shard_id, bits, n_items, round)``.
+``(shard_id, bits, n_items, bits_set, n_shards)`` — one row per shard,
+each write a full snapshot (there is no round column).
 
 Probe protocol (correctness-first): bloom answers "definitely unseen"
 (skip the expensive anti-join for those rows); "maybe seen" rows fall
@@ -123,12 +124,11 @@ def upsert_shards(
     )
     rows = new_rows
     if old is not None:
-        old_n = "n_shards" if "n_shards" in old.columns else None
         rows = old.select(
             "shard_id",
             "bits",
             "n_items",
-            (F.col(old_n) if old_n else F.lit(n_shards)).cast("int").alias("n_shards"),
+            "n_shards",
             F.lit(None).cast("string").alias("url_hash_str"),
         ).unionByName(new_rows)
 
@@ -177,23 +177,24 @@ def bloom_partition(candidates: DataFrame, shards: DataFrame, n_shards: int) -> 
     cols = list(candidates.columns)
 
     def probe(cand: pd.DataFrame, shard: pd.DataFrame) -> pd.DataFrame:
+        # guard: a shard table built under a different shard count
+        # routes keys to the wrong bitset — a silent source of bloom
+        # false NEGATIVES (upsert_shards already raises on this; the
+        # probe is where the mismatch corrupts results, so it must too).
+        # Checked before the empty-side exits, so every persisted shard
+        # group raises, not only those a candidate happens to hit.
+        persisted = {int(x) for x in shard["n_shards"]} if len(shard) else set()
+        if persisted - {n_shards}:
+            raise ValueError(
+                f"bloom shards persisted with n_shards={persisted}, "
+                f"probed with n_shards={n_shards}"
+            )
         if cand.empty:
             return pd.DataFrame(columns=cols + ["maybe_seen"])
         if shard.empty:
             out = cand[cols].copy()
             out["maybe_seen"] = False
             return out
-        # guard: a shard table built under a different shard count
-        # routes keys to the wrong bitset — a silent source of bloom
-        # false NEGATIVES (upsert_shards already raises on this; the
-        # probe is where the mismatch corrupts results, so it must too)
-        if "n_shards" in shard.columns:
-            persisted = {int(x) for x in shard["n_shards"]}
-            if persisted != {n_shards}:
-                raise ValueError(
-                    f"bloom shards persisted with n_shards={persisted}, "
-                    f"probed with n_shards={n_shards}"
-                )
         # OR *all* rows for this shard id — a multi-row shards table
         # (e.g. un-merged round snapshots) must not silently drop bits,
         # which would yield bloom false NEGATIVES.

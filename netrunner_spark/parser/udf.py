@@ -30,21 +30,23 @@ PARSE_SCHEMA = T.StructType(
 )
 
 
+# the row of a page that cannot be parsed (no text, no links); read-only
+_EMPTY_PARSE = {
+    "canonical_url": None,
+    "content": "",
+    "content_hash": None,
+    "description": "",
+    "links": [],
+    "meta": {},
+    "title": None,
+}
+
+
 def _parse_batch(urls: pd.Series, docs: pd.Series) -> pd.DataFrame:
     rows = []
     for url, doc in zip(urls, docs):
         if not isinstance(doc, str) or not isinstance(url, str):
-            rows.append(
-                {
-                    "canonical_url": url,
-                    "content": "",
-                    "content_hash": None,
-                    "description": "",
-                    "links": [],
-                    "meta": {},
-                    "title": None,
-                }
-            )
+            rows.append({**_EMPTY_PARSE, "canonical_url": url})
             continue
         try:
             rows.append(html_to_text(url, doc).as_row())
@@ -53,27 +55,13 @@ def _parse_batch(urls: pd.Series, docs: pd.Series) -> pd.DataFrame:
             # recursive DOM walk (r5 review); one wild page must not
             # fail the task — degrade to an empty parse for THAT row
             # (hash of empty content, no links) and keep the batch
-            rows.append(
-                {
-                    "canonical_url": url,
-                    "content": "",
-                    "content_hash": None,
-                    "description": "",
-                    "links": [],
-                    "meta": {},
-                    "title": None,
-                }
-            )
+            rows.append({**_EMPTY_PARSE, "canonical_url": url})
     return pd.DataFrame(rows)
 
 
-@pandas_udf(PARSE_SCHEMA)
-def parse_html_udf(urls: pd.Series, docs: pd.Series) -> pd.DataFrame:
-    return _parse_batch(urls, docs)
-
-
 def make_parse_udf(fallback_counter=None):
-    """Parse UDF wired to a Spark accumulator counting docs that hit
+    """Parse UDF (Arrow-batched, one struct column of PARSE_SCHEMA),
+    optionally wired to a Spark accumulator counting docs that hit
     the stdlib-fallback path — the fast tokenizer's escape hatch is
     silent per-row, so the drain surfaces its rate (archive_stage
     'parse_fallbacks'); a drift toward fallback-heavy HTML shows up in
@@ -105,11 +93,7 @@ def parse_pages(
     Only 2xx rows should be fed here (F6 filter applied by caller, as in
     create_archives, archive.rs:378).
     """
-    udf = (
-        parse_html_udf
-        if fallback_counter is None
-        else make_parse_udf(fallback_counter)
-    )
+    udf = make_parse_udf(fallback_counter)
     return fetched.withColumn(
         "parsed", udf(F.col(url_col), F.col(content_col))
     ).select(

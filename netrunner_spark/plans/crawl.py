@@ -13,8 +13,10 @@ budget per round. Round 2 moves the scheduling itself out of the loop:
   * one storage layout: the ``schedule``, the page store and the image
     payloads are bucketed on ``url_hash`` with one bucket count
     (``tables.N_BUCKETS`` unless configured; Iceberg
-    ``bucket(N, url_hash)`` on a cluster), so the fetch join never
-    shuffles.
+    ``bucket(N, url_hash)`` on a cluster), so the fetch join of an
+    init-scheduled round never shuffles. Rounds that link expansion
+    appends live in ``schedule_ext`` slices, which are unbucketed: such a
+    round above ``BROADCAST_BATCH_BYTES`` shuffles its batch.
   * each round is then: partition-pruned read of ``sched_round=r`` →
     exchange-free fetch join over the bucketed store (the batch
     broadcasts below ``BROADCAST_BATCH_BYTES``, merge-joins co-located
@@ -26,7 +28,10 @@ budget per round. Round 2 moves the scheduling itself out of the loop:
     time membership, exactly when the reference consults its seen set,
     mod.rs:221-241) — it only changes when link expansion enqueues new
     URLs, so the per-round "bloom checkpoint" is the unchanged
-    committed snapshot, not a rewrite.
+    committed snapshot, not a rewrite. ``_fold_bloom`` is the one place
+    it is written: a full build over every scheduled key when no bloom
+    exists (init, or an enqueue that finds it missing), else a fold of
+    the new keys.
   * link expansion (``follow_links``) runs each of its 3 Python passes
     ONCE per round: parse (pages → (link, depth+1) rows in one
     ``mapInPandas`` pass, no join back to the pages), normalize + host
@@ -68,7 +73,7 @@ from netrunner_spark.operators.politeness import (
     schedule_rounds,
     with_priority,
 )
-from netrunner_spark.operators.seen import unseen_once, upsert_shards
+from netrunner_spark.operators.seen import SHARD_SCHEMA, unseen_once, upsert_shards
 from netrunner_spark.parser.udf import parse_links, parse_pages
 from netrunner_spark.tables import N_BUCKETS, LakeCatalog
 
@@ -118,9 +123,9 @@ class CrawlConfig:
     enforce_wall_clock: bool = False
     # bucket count of the SCHEDULE, a Spark bucketed table on url_hash.
     # Equal to the fetcher's store bucket count (both default to
-    # tables.N_BUCKETS), every round's fetch join is co-located and
-    # exchange-free with no driver-serial broadcast build — the round-2
-    # serial floor (BENCH/BASELINE.md §5).
+    # tables.N_BUCKETS), every init-scheduled round's fetch join is
+    # co-located and exchange-free with no driver-serial broadcast
+    # build — the round-2 serial floor (BENCH/BASELINE.md §5).
     colocated_buckets: int = N_BUCKETS
 
 
@@ -147,19 +152,56 @@ class CrawlJob:
         self._budgets = None
 
     # ------------------------------------------------------------ lifecycle
-    def _schedule_df(self) -> DataFrame:
+    def _scheduled(self, blocked: bool = False) -> DataFrame:
+        """Every scheduled row (SCHEDULE_COLS): ``schedule`` plus every
+        ``schedule_ext`` slice. ``blocked`` keeps the robots-blocked
+        ``sched_round = -1`` rows, which are never seen keys."""
         # empty-schema fallback: a purely streaming-fed crawl calls
         # enqueue_frontier before any init_frontier, so no ``schedule``
         # table exists yet — the documented handoff entry point must
         # not raise (r5 review). All rounds then live in schedule_ext.
         try:
-            return self.cat.read_table("schedule")
+            sched = self.cat.read_table("schedule")
         except FileNotFoundError:
-            return self.spark.createDataFrame(
+            sched = self.spark.createDataFrame(
                 [],
                 "url string, url_hash long, host string, depth int,"
                 " priority double, sched_round int",
             )
+        if not blocked:
+            sched = sched.filter(F.col("sched_round") >= 0)
+        sched = sched.select(*SCHEDULE_COLS)
+        ext = self.cat.read_slices("schedule_ext")
+        return sched if ext is None else sched.unionByName(ext.select(*SCHEDULE_COLS))
+
+    def _bloom_shards(self) -> DataFrame | None:
+        """The committed bloom snapshot, or None. Read with its known
+        schema: a plain parquet read runs a schema-inference job."""
+        if not self.cat.exists("bloom_shards"):
+            return None
+        return self.spark.read.schema(SHARD_SCHEMA).parquet(
+            self.cat.snapshot_path("bloom_shards")
+        )
+
+    def _fold_bloom(self, new_keys: DataFrame | None = None) -> None:
+        """The one place the URL-seen bloom is written. With no bloom on
+        disk it is built over every scheduled key plus ``new_keys`` —
+        this also rebuilds a bloom lost to a crash between init's
+        schedule and bloom writes, and builds a streaming-only crawl's
+        bloom on its first enqueue. Otherwise ``new_keys`` (default:
+        every scheduled key) are ORed into it. Each write is a full
+        snapshot; the vacuum keeps the last two, so disk stays bounded
+        over rounds. A persisted shard count other than
+        ``n_bloom_shards`` raises (``upsert_shards``)."""
+        shards = self._bloom_shards()
+        keys = new_keys
+        if shards is None or keys is None:
+            sched = self._scheduled().select("url_hash")
+            keys = sched if keys is None else sched.unionByName(keys)
+        self.cat.write(
+            upsert_shards(shards, keys, self.cfg.n_bloom_shards), "bloom_shards"
+        )
+        self.cat.vacuum("bloom_shards")
 
     def _sched_rounds(self) -> list[int]:
         return self.cat.table_partition_values("schedule", "sched_round")
@@ -170,27 +212,10 @@ class CrawlJob:
         then every allowed URL gets its drain round assigned up front
         (schedule_rounds — one window job for the whole crawl). The
         URL-seen bloom is built over all scheduled keys in the same
-        step. No-op if a schedule exists (resume, W4/mod.rs:121-128)."""
+        step. No-op if a schedule exists (resume, W4/mod.rs:121-128): a
+        bloom lost to a crash between the two writes is rebuilt by the
+        next enqueue's fold."""
         if self.cat.table_meta("schedule") is not None:
-            # heal the init crash window: schedule committed but the
-            # bloom write never ran. Without this the seen guard
-            # degrades to the full exact anti-join for the lifetime of
-            # the crawl (a bloom that enqueue_frontier creates holds
-            # only its own new keys). Rebuild from schedule PLUS any
-            # schedule_ext appends that ran bloom-less.
-            if not self.cat.exists("bloom_shards"):
-                keys = (
-                    self._schedule_df()
-                    .filter(F.col("sched_round") >= 0)
-                    .select("url_hash")
-                )
-                ext = self.cat.read_slices("schedule_ext")
-                if ext is not None:
-                    keys = keys.unionByName(ext.select("url_hash"))
-                self.cat.write(
-                    upsert_shards(None, keys, self.cfg.n_bloom_shards),
-                    "bloom_shards",
-                )
             return
         base = urls.select("url", "url_hash", "host", F.lit(0).alias("depth"))
         ok = robots_allowed(base, self.robots)
@@ -217,14 +242,7 @@ class CrawlJob:
             n_buckets=self.cfg.colocated_buckets,
             partition_by=["sched_round"],
         )
-        keys = (
-            self._schedule_df()
-            .filter(F.col("sched_round") >= 0)
-            .select("url_hash")
-        )
-        self.cat.write(
-            upsert_shards(None, keys, self.cfg.n_bloom_shards), "bloom_shards"
-        )
+        self._fold_bloom()
 
     def current_round(self) -> int:
         """Next round to run = 1 + last COMMITTED cache slice (driver-side
@@ -457,24 +475,17 @@ class CrawlJob:
         ``links``: (url, url_hash, host, depth) — normalized/admitted
         by the caller."""
         links = robots_allowed(links, self.robots)
-
-        shards = (
-            self.cat.read("bloom_shards") if self.cat.exists("bloom_shards") else None
-        )
-        n_sh = self.cfg.n_bloom_shards
-        if shards is not None and "n_shards" in shards.columns:
-            n_sh = int(shards.agg(F.max("n_shards")).first()[0])
-
-        scheduled = self._schedule_df().select("url_hash", "sched_round")
-        ext = self.cat.read_slices("schedule_ext")
-        seen_keys = scheduled.filter(F.col("sched_round") >= 0).select("url_hash")
-        if ext is not None:
-            seen_keys = seen_keys.unionByName(ext.select("url_hash"))
         # blocked keys are NOT in the bloom; robots_allowed above already
         # re-filters them, so they can't re-enter via this path
+        seen_keys = self._scheduled().select("url_hash")
         base_round = self.max_round() + 1
         obs = Observation()
-        with unseen_once(links, seen_keys, shards, n_sh) as fresh:
+        # a bloom persisted under another shard count raises in the
+        # probe, before anything is written; no bloom (streaming-only
+        # crawl, or lost to an init crash) probes exactly
+        with unseen_once(
+            links, seen_keys, self._bloom_shards(), self.cfg.n_bloom_shards
+        ) as fresh:
             newly = (
                 schedule_rounds(
                     with_priority(fresh),
@@ -497,15 +508,7 @@ class CrawlJob:
         # order had the fatal window: keys in schedule_ext but not in
         # the bloom probe as definitely-unseen and are scheduled AGAIN
         # on replay — a false NEGATIVE no backstop can catch.
-        # Streaming-only mode (no init_frontier ever ran, shards None)
-        # builds the bloom here from the first enqueue, so later cycles
-        # get the probe pre-filter instead of exact-anti-join-only
-        # forever. Each fold is a full bloom snapshot; the
-        # vacuum keeps the last two, so disk stays bounded over rounds.
-        self.cat.write(
-            upsert_shards(shards, newly.select("url_hash"), n_sh), "bloom_shards"
-        )
-        self.cat.vacuum("bloom_shards")
+        self._fold_bloom(newly.select("url_hash"))
         self.cat.append_partitions(newly, "schedule_ext", "sched_round")
 
     # ------------------------------------------------------- frontier state
@@ -515,10 +518,7 @@ class CrawlJob:
         ONCE at drain end (round 1 rewrote this table every round).
         State is fully derivable: blocked (sched_round=-1) / fetched
         (2xx cache row) / failed (cache row) / queued (no cache row)."""
-        sched = self._schedule_df().select(*SCHEDULE_COLS)
-        ext = self.cat.read_slices("schedule_ext")
-        if ext is not None:
-            sched = sched.unionByName(ext.select(*SCHEDULE_COLS))
+        sched = self._scheduled(blocked=True)
         cache = self.cache_df()
         if cache is None:
             attempts = self.spark.createDataFrame(

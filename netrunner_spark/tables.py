@@ -416,14 +416,6 @@ class LakeCatalog:
         self._commit(table, new)
         return new
 
-    def read_bucketed(self, table: str, version: int | None = None) -> DataFrame:
-        """Read a bucketed snapshot WITHOUT the layout column."""
-        return (
-            self.spark.read.option("basePath", self.snapshot_path(table, version))
-            .parquet(self.snapshot_path(table, version))
-            .drop(BUCKET_COL)
-        )
-
     def merge(
         self,
         df: DataFrame,

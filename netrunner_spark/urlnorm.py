@@ -185,16 +185,6 @@ normalize_host_udf = pandas_udf(
 ).asNondeterministic()
 
 
-@pandas_udf(T.StringType())
-def normalize_href_udf(bases: pd.Series, hrefs: pd.Series) -> pd.Series:
-    return pd.Series(
-        [
-            normalize_href(b, h) if isinstance(b, str) and isinstance(h, str) else None
-            for b, h in zip(bases, hrefs)
-        ]
-    )
-
-
 def wayback_url(url: str, date_yyyymmdd: str) -> str:
     """Internet-Archive snapshot URL (X7, cdx.rs:14-23). The reference
     stamps *today's* date; ours takes the date explicitly (deterministic

@@ -553,14 +553,19 @@ def test_expanding_rounds_keep_bloom_snapshots_bounded(
 def test_init_crash_before_bloom_write_heals_on_resume(
     spark, world, fetcher, tmp_path_factory
 ):
-    """The init_frontier crash window (r5 review): schedule committed,
-    bloom write never ran. Resume must rebuild the bloom (previously it
-    silently degraded to full anti-joins for the crawl's lifetime)."""
+    """The init_frontier crash window: schedule committed, bloom write
+    never ran. The resumed init is a no-op; the next expanding round
+    probes exactly and its fold rebuilds the full bloom, so every
+    ``schedule`` and ``schedule_ext`` key probes maybe-seen and no URL
+    is scheduled twice."""
     import shutil
 
     from netrunner_spark.operators.seen import bloom_partition
 
-    cfg = CrawlConfig(round_seconds=10.0, max_rounds=30, n_bloom_shards=8)
+    cfg = CrawlConfig(
+        round_seconds=10.0, max_rounds=30, n_bloom_shards=8,
+        follow_links=True, max_depth=2,
+    )
     seeds_df = world["web"].filter(F.col("url").endswith("/docs/0")).select(
         "url", "host", F.xxhash64("url").alias("url_hash")
     )
@@ -573,19 +578,88 @@ def test_init_crash_before_bloom_write_heals_on_resume(
     job.init_frontier(seeds_df)
     # simulate the crash: bloom vanishes, schedule stays
     shutil.rmtree(cat._tdir("bloom_shards"))
-    assert not cat.exists("bloom_shards")
 
     job2 = CrawlJob(
         spark, cat, fetcher, world["robots"], cfg,
         lens=world["lens"],
     )
     job2.init_frontier(seeds_df)
+    assert not cat.exists("bloom_shards")
+    job2.run_round(0)  # expanding: exact probe, then the full rebuild
     assert cat.exists("bloom_shards")
-    shards = cat.read("bloom_shards")
-    sched_keys = (
-        job2._schedule_df().filter(F.col("sched_round") >= 0).select("url_hash")
+    job2.run_round(1)  # expanding again, through the rebuilt bloom
+    assert cat.read_slices("schedule_ext") is not None
+    sched_keys = job2._scheduled().select("url_hash")
+    tagged = bloom_partition(
+        sched_keys, cat.read("bloom_shards"), cfg.n_bloom_shards
     )
-    tagged = bloom_partition(sched_keys, shards, cfg.n_bloom_shards)
+    assert tagged.filter(~F.col("maybe_seen")).count() == 0
+    urls = [r["url"] for r in job2._scheduled(blocked=True).collect()]
+    assert len(urls) == len(set(urls))
+
+
+def test_resume_with_other_shard_count_raises_before_writing(
+    spark, world, fetcher, tmp_path_factory
+):
+    """The bloom's shard count is the configured ``n_bloom_shards``. A
+    resume configured with another count fails on its first expanding
+    round, in the probe, before the bloom or ``schedule_ext`` is
+    written — a silent re-key would route keys to the wrong shard."""
+    import dataclasses
+
+    cfg = CrawlConfig(
+        round_seconds=10.0, max_rounds=30, n_bloom_shards=8,
+        follow_links=True, max_depth=2,
+    )
+    seeds_df = world["web"].filter(F.col("url").endswith("/docs/0")).select(
+        "url", "host", F.xxhash64("url").alias("url_hash")
+    )
+    cat = LakeCatalog(spark, str(tmp_path_factory.mktemp("lake_shard_n")))
+    job = CrawlJob(
+        spark, cat, fetcher, world["robots"], cfg, lens=world["lens"],
+    )
+    job.init_frontier(seeds_df)
+    job.run_round(0)
+    ext_before = sorted(tuple(r) for r in cat.read_slices("schedule_ext").collect())
+    assert ext_before
+    bloom_version = cat.version("bloom_shards")
+
+    job2 = CrawlJob(
+        spark, cat, fetcher, world["robots"],
+        dataclasses.replace(cfg, n_bloom_shards=4), lens=world["lens"],
+    )
+    with pytest.raises(Exception, match="n_shards"):
+        job2.run_round(1)
+    ext_after = sorted(tuple(r) for r in cat.read_slices("schedule_ext").collect())
+    assert ext_after == ext_before
+    assert cat.version("bloom_shards") == bloom_version
+
+
+def test_init_after_streaming_enqueue_keeps_streamed_keys_in_bloom(
+    spark, world, fetcher, tmp_path_factory
+):
+    """A streaming-fed crawl enqueues before any ``init_frontier``; the
+    init that follows folds its schedule into that bloom instead of
+    replacing it, so the streamed keys still probe maybe-seen (a
+    replaced bloom lets them through the probe as definitely unseen)."""
+    from netrunner_spark.operators.seen import bloom_partition
+
+    cfg = CrawlConfig(round_seconds=10.0, n_bloom_shards=8)
+    cat = LakeCatalog(spark, str(tmp_path_factory.mktemp("lake_stream_init")))
+    job = CrawlJob(spark, cat, fetcher, world["robots"], cfg)
+    keyed = world["web"].select(
+        "url", "host", F.xxhash64("url").alias("url_hash")
+    )
+    job.enqueue_frontier(
+        keyed.filter(F.col("url").endswith("/docs/3")).withColumn(
+            "depth", F.lit(0)
+        )
+    )
+    assert cat.exists("bloom_shards")
+    job.init_frontier(keyed.filter(F.col("url").endswith("/docs/0")))
+    sched_keys = job._scheduled().select("url_hash")
+    assert cat.read_slices("schedule_ext").count() > 0
+    tagged = bloom_partition(sched_keys, cat.read("bloom_shards"), 8)
     assert tagged.filter(~F.col("maybe_seen")).count() == 0
 
 

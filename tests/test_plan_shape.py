@@ -28,6 +28,21 @@ def _hash_exchange(df) -> bool:
     return "Exchange hashpartitioning" in _explain(df, "simple")
 
 
+def _ancestors(lines: list[str], i: int) -> list[int]:
+    """Indices of the nodes above line ``i`` of the one-line explain,
+    parent first: each node is indented one step below its parent."""
+    def col(ln):
+        m = re.match(r"^([ :|]*)[+:]- ", ln)
+        return len(m.group(1)) if m else 0
+
+    out, c = [], col(lines[i])
+    for j in range(i - 1, -1, -1):
+        if c and col(lines[j]) < c:
+            out.append(j)
+            c = col(lines[j])
+    return out
+
+
 PY_NODES = (
     "ArrowEvalPython",
     "BatchEvalPython",
@@ -194,9 +209,16 @@ def test_robots_verdict_is_shuffle_free(spark, drained):
     web = drained["web"]
     frontier = web.select("url", "host", url_hash_col("url").alias("url_hash"))
     out = robots_allowed(frontier, gen_robots(spark, 3))
-    plan = _explain(out)
-    assert "Exchange hashpartitioning" not in plan
-    assert "BroadcastHashJoin" in plan
+    lines = _explain(out, "simple").splitlines()
+    assert any("BroadcastHashJoin" in ln for ln in lines)
+    # the one hash exchange is the per-host rules aggregate, below the
+    # broadcast of the small robots side; the frontier side has none
+    hashed = [i for i, ln in enumerate(lines) if "Exchange hashpartitioning" in ln]
+    assert len(hashed) == 1
+    assert "hashpartitioning(host#" in lines[hashed[0]]
+    up = [lines[j] for j in _ancestors(lines, hashed[0])]
+    assert "ObjectHashAggregate" in up[0]
+    assert "BroadcastExchange" in up[1]
 
 
 def test_cache_write_plan_has_no_shuffle(drained):

@@ -132,8 +132,7 @@ def test_default_budget_follows_configured_rate(
         web.select("url", "host", url_hash_col("url").alias("url_hash"))
     )
     per_round = (
-        job._schedule_df()
-        .filter(F.col("sched_round") >= 0)
+        job._scheduled()
         .groupBy("sched_round")
         .count()
         .collect()
