@@ -177,11 +177,11 @@ class CrawlJob:
     def _bloom_shards(self) -> DataFrame | None:
         """The committed bloom snapshot, or None. Read with its known
         schema: a plain parquet read runs a schema-inference job."""
-        if not self.cat.exists("bloom_shards"):
-            return None
-        return self.spark.read.schema(SHARD_SCHEMA).parquet(
-            self.cat.snapshot_path("bloom_shards")
-        )
+        if self.cat.exists("bloom_shards"):
+            return self.spark.read.schema(SHARD_SCHEMA).parquet(
+                self.cat.snapshot_path("bloom_shards")
+            )
+        return None
 
     def _fold_bloom(self, new_keys: DataFrame | None = None) -> None:
         """The one place the URL-seen bloom is written. With no bloom on
