@@ -219,8 +219,8 @@ class IcebergCatalog:
         bucket_hint: str | None = None,
     ) -> int:
         """True MERGE INTO (K2): file-level pushdown — Iceberg rewrites
-        only the data files containing matched keys, the real-cluster
-        form of tables.merge's bucket-wise rewrite."""
+        only the data files containing matched keys, where tables.merge
+        rewrites the whole snapshot (left-anti on the keys + union)."""
         keys = [key] if isinstance(key, str) else list(key)
         if not self.exists(table):
             return self.write(df.dropDuplicates(keys), table, bucket_hint=bucket_hint)

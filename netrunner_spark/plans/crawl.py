@@ -223,6 +223,9 @@ class CrawlJob:
             with_priority(ok),
             self.budgets(),
             default_budget=self._default_budget(),
+            # after any rounds a streaming enqueue already scheduled, so
+            # no host gets two budgets' worth of URLs in one round
+            round_offset=self.max_round() + 1,
             n_salts=self.cfg.schedule_salts,
         ).select(*SCHEDULE_COLS)
         blocked = base.join(ok.select("url_hash"), "url_hash", "left_anti").select(
@@ -612,11 +615,10 @@ class CrawlJob:
         }
 
     # -------------------------------------------------------- maintenance
-    def compact_cache(self, n_buckets: int | None = None) -> int | None:
+    def compact_cache(self) -> int | None:
         """Optional maintenance for long crawls (VERDICT r3 #10): fold
-        the committed per-round cache slices into one bucketed base
-        snapshot (key = url_hash, so the compacted cache joins the
-        bucketed store/schedule exchange-free). Metric/expansion
+        the committed per-round cache slices into one base snapshot,
+        keyed on url_hash (highest round wins). Metric/expansion
         backfills run first, so a round folded away has nothing left to
         heal; resume keeps working because the compaction floor stands
         in for the deleted slice markers (``max_committed_slice``).
@@ -626,13 +628,10 @@ class CrawlJob:
         per round; keyed on (host, round) so nothing collapses."""
         self._backfill_metrics()
         self._backfill_expansion()
-        nb = n_buckets or self.cfg.colocated_buckets
-        hi = self.cat.compact_slices(
-            "cache", "fetched_round", key="url_hash", n_buckets=nb
-        )
+        hi = self.cat.compact_slices("cache", "fetched_round", key="url_hash")
         if hi is not None:
             self.cat.compact_slices(
-                "metrics", "round", key=["host", "round"], n_buckets=1, upto=hi
+                "metrics", "round", key=["host", "round"], upto=hi
             )
         return hi
 

@@ -23,8 +23,8 @@ headers, content, image_id, attempts, source]``:
   UA ``netrunner_spark/<version>`` — envelope per crawler.rs:37-43).
   Optional: not exercised in the sandbox (no network), import-gated.
 
-Dual-source policy (S9): ``og_first`` picks origin vs archive column
-first; the mock store carries both variants via ``ia_ok`` flag logic —
+Dual-source policy (S9): origin first, the archive (``ia_status``)
+when the origin fails — the mock store carries both variants;
 ``source`` records which side served the page.
 """
 
@@ -43,7 +43,6 @@ class MockFetcher:
     def __init__(
         self,
         web: DataFrame,
-        og_first: bool = True,
         images_by_url: DataFrame | None = None,
     ):
         """``web``: synthetic page store (synth.gen_web schema), read
@@ -59,7 +58,6 @@ class MockFetcher:
         if "url_hash" not in web.columns:
             web = web.withColumn("url_hash", F.xxhash64("url"))
         self.web = web
-        self.og_first = og_first
         self.images_by_url = images_by_url
 
     @staticmethod
@@ -98,19 +96,16 @@ class MockFetcher:
             ),
         )
         batch_cols = list(batch.columns)
-        # dual-source policy (S9, crawler.rs:62-108): primary side first;
-        # on failure fall back to the other side — column logic, one pass
-        primary = F.col("_status") if self.og_first else F.col("_ia_status")
-        secondary = F.col("_ia_status") if self.og_first else F.col("_status")
-        primary_ok = primary.between(200, 299)
-        secondary_ok = secondary.between(200, 299)
+        # dual-source policy (S9, crawler.rs:62-108): origin first; on
+        # failure fall back to the archive — column logic, one pass
+        origin, archive = F.col("_status"), F.col("_ia_status")
+        origin_ok = origin.between(200, 299)
+        archive_ok = archive.between(200, 299)
         eff_status = (
-            F.when(primary_ok, primary)
-            .when(secondary_ok, secondary)
-            .otherwise(F.coalesce(primary, secondary))
+            F.when(origin_ok, origin)
+            .when(archive_ok, archive)
+            .otherwise(F.coalesce(origin, archive))
         )
-        src_primary = "origin" if self.og_first else "archive"
-        src_secondary = "archive" if self.og_first else "origin"
         bset = self._side(batch, prefer_broadcast)
         hits = pages.join(bset, "url_hash").select(
             *batch_cols,
@@ -120,16 +115,16 @@ class MockFetcher:
             .otherwise(F.lit(""))
             .alias("content"),
             F.col("_image_id").alias("image_id"),
-            F.when(primary_ok & F.col("flaky_once"), F.lit(2))  # 429→retry (F11)
-            .when(primary_ok, F.lit(1))
-            .when(secondary_ok & primary.isin(*NO_RETRY_STATUSES), F.lit(2))
-            .when(secondary_ok, F.lit(RETRY_BUDGET + 1))
+            F.when(origin_ok & F.col("flaky_once"), F.lit(2))  # 429→retry (F11)
+            .when(origin_ok, F.lit(1))
+            .when(archive_ok & origin.isin(*NO_RETRY_STATUSES), F.lit(2))
+            .when(archive_ok, F.lit(RETRY_BUDGET + 1))
             .when(eff_status.isin(*NO_RETRY_STATUSES), F.lit(1))
             .otherwise(F.lit(RETRY_BUDGET))
             .alias("attempts"),
-            F.when(primary_ok, F.lit(src_primary))
-            .when(secondary_ok, F.lit(src_secondary))
-            .otherwise(F.lit(src_primary))
+            F.when(origin_ok, F.lit("origin"))
+            .when(archive_ok, F.lit("archive"))
+            .otherwise(F.lit("origin"))
             .alias("source"),
         )
         # keys present in the store: column-pruned scan (url_hash only).
@@ -153,7 +148,7 @@ class MockFetcher:
             F.lit(None).cast("string").alias("content"),
             F.lit(None).cast("string").alias("image_id"),
             F.lit(RETRY_BUDGET).alias("attempts"),  # all retries consumed (W5)
-            F.lit("origin" if self.og_first else "archive").alias("source"),
+            F.lit("origin").alias("source"),
         )
         if self.images_by_url is not None:
             hits = self._attach_images_inline(
@@ -244,7 +239,6 @@ def prepare_colocated_fetcher(
     web: DataFrame,
     images: DataFrame | None = None,
     n_buckets: int = N_BUCKETS,
-    og_first: bool = True,
 ) -> MockFetcher:
     """One-time layout job (drain init, amortized over every round):
     write the page store — and, when given, the image payloads keyed by
@@ -306,9 +300,7 @@ def prepare_colocated_fetcher(
                 provenance=img_prov,
             )
         ibu = cat.read_table("images_by_url")
-    return MockFetcher(
-        cat.read_table("web_store"), og_first=og_first, images_by_url=ibu
-    )
+    return MockFetcher(cat.read_table("web_store"), images_by_url=ibu)
 
 
 def _decode_body(body: bytes, headers: list[dict]) -> str:
@@ -364,7 +356,6 @@ class HttpFetcher:
 
     def __init__(
         self,
-        og_first: bool = True,
         rps: float = 2.0,
         pool_size: int = 8,
         content_binary: bool = False,
@@ -388,7 +379,6 @@ class HttpFetcher:
         the politeness contract becomes an aggregate per-host rate cap
         (the reference's governor token bucket is also rate-based, not
         spacing-based, crawler.rs:21) while K pools fetch in parallel."""
-        self.og_first = og_first
         self.rps = rps
         self.pool_size = pool_size
         self.content_binary = content_binary

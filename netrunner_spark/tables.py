@@ -17,7 +17,10 @@ class for an Iceberg catalog; call sites only use read/write/merge.
 
 MERGE semantics (K2): new rows win over existing rows with the same
 key — replaces the reference's first-wins file dedup (mod.rs:177-208)
-with deterministic last-write-wins keyed upserts.
+with deterministic last-write-wins keyed upserts: ``merge`` rewrites
+the snapshot once per call, keyed by a left-anti join. The one bucketed
+layout is the Spark bucketed table (``write_table_bucketed`` /
+``read_table``) that the crawl's co-located joins read.
 """
 
 from __future__ import annotations
@@ -31,7 +34,6 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-BUCKET_COL = "_bucket"
 # bucket count of the co-located crawl layout (page store, image
 # payloads, schedule) when the caller names none
 N_BUCKETS = 8
@@ -75,9 +77,7 @@ class LakeCatalog:
 
     # ------------------------------------------------------------------ API
     def read(self, table: str, version: int | None = None) -> DataFrame:
-        df = self.spark.read.parquet(self.snapshot_path(table, version))
-        # bucketed layout column is physical, not logical — hide it
-        return df.drop(BUCKET_COL) if BUCKET_COL in df.columns else df
+        return self.spark.read.parquet(self.snapshot_path(table, version))
 
     def write(
         self,
@@ -102,14 +102,6 @@ class LakeCatalog:
         if partition_by:
             writer = writer.partitionBy(*partition_by)
         writer.parquet(path)
-        # a plain write produces an UNBUCKETED snapshot: stale _buckets
-        # metadata from an earlier write_bucketed would make the next
-        # keyed merge treat this snapshot as bucket-laid-out, find zero
-        # bucket dirs, and silently drop every existing row
-        try:
-            os.remove(self._bucket_meta_path(table))
-        except FileNotFoundError:
-            pass
         self._commit(table, new)
         return new
 
@@ -198,7 +190,7 @@ class LakeCatalog:
     def max_committed_slice(self, table: str, slice_col: str) -> int | None:
         vals = [
             v
-            for v in (self._slice_values(table, slice_col) or [])
+            for v in self._slice_values(table, slice_col)
             if self.slice_committed(table, slice_col, v)
         ]
         # the compaction floor stands in for deleted slice markers —
@@ -219,25 +211,24 @@ class LakeCatalog:
             if e.is_dir() and e.name.startswith(f"{slice_col}=")
         ]
 
-    def slice_bytes(self, table: str, slice_col: str, slice_val) -> int:
-        """On-disk bytes of one slice (driver stat, no job)."""
-        d = os.path.join(self._tdir(table), "data", f"{slice_col}={slice_val}")
+    @staticmethod
+    def _parquet_bytes(d: str) -> int:
+        """On-disk bytes of the parquet files in one dir (driver stat,
+        no job); 0 when the dir does not exist."""
         if not os.path.isdir(d):
             return 0
         return sum(
             e.stat().st_size for e in os.scandir(d) if e.name.endswith(".parquet")
         )
 
+    def slice_bytes(self, table: str, slice_col: str, slice_val) -> int:
+        """On-disk bytes of one slice (driver stat, no job)."""
+        return self._parquet_bytes(
+            os.path.join(self._tdir(table), "data", f"{slice_col}={slice_val}")
+        )
+
     def max_slice(self, table: str, slice_col: str) -> int | None:
-        base = os.path.join(self._tdir(table), "data")
-        if not os.path.isdir(base):
-            return None
-        vals = [
-            int(e.name.split("=", 1)[1])
-            for e in os.scandir(base)
-            if e.is_dir() and e.name.startswith(f"{slice_col}=")
-        ]
-        return max(vals) if vals else None
+        return max(self._slice_values(table, slice_col), default=None)
 
     # ----------------------------------------- Spark-native bucketed tables
     # (the co-located-join layout: two tables bucketBy'd on the same key
@@ -346,11 +337,8 @@ class LakeCatalog:
         """On-disk bytes of one partition of a BUCKETED table (driver
         stat, no job) — the broadcast-vs-merge dial for crawl rounds.
         0 when the partition (or the table) does not exist."""
-        d = os.path.join(self._tdir(table), "bucketed", f"{part_col}={val}")
-        if not os.path.isdir(d):
-            return 0
-        return sum(
-            e.stat().st_size for e in os.scandir(d) if e.name.endswith(".parquet")
+        return self._parquet_bytes(
+            os.path.join(self._tdir(table), "bucketed", f"{part_col}={val}")
         )
 
     def table_partition_values(self, table: str, part_col: str) -> list[int]:
@@ -379,43 +367,7 @@ class LakeCatalog:
     def has_marker(self, table: str, name: str) -> bool:
         return os.path.isfile(os.path.join(self._tdir(table), f"_marker-{name}"))
 
-    # --------------------------------------------------- bucketed merge (K2)
-    def _bucket_meta_path(self, table: str) -> str:
-        return os.path.join(self._tdir(table), "_buckets")
-
-    def bucket_meta(self, table: str) -> dict | None:
-        try:
-            with open(self._bucket_meta_path(table), encoding="utf-8") as f:
-                return json.load(f)
-        except (FileNotFoundError, ValueError):
-            return None
-
-    @staticmethod
-    def _bucket_expr(keys: list[str], n_buckets: int):
-        return F.pmod(F.xxhash64(*[F.col(k) for k in keys]), F.lit(n_buckets))
-
-    def write_bucketed(
-        self, df: DataFrame, table: str, key: str | list[str], n_buckets: int = 64
-    ) -> int:
-        """Snapshot write with an explicit Iceberg-style ``bucket(N, key)``
-        layout: rows land under ``snap-V/_bucket=k`` with
-        k = pmod(xxhash64(key), N). This is what makes ``merge`` touch
-        O(affected buckets) instead of O(table)."""
-        keys = [key] if isinstance(key, str) else list(key)
-        cur = self.version(table)
-        new = 1 if cur is None else cur + 1
-        path = os.path.join(self._tdir(table), f"snap-{new}")
-        out = df.withColumn(BUCKET_COL, self._bucket_expr(keys, n_buckets))
-        out.repartition(F.col(BUCKET_COL)).write.mode("overwrite").partitionBy(
-            BUCKET_COL
-        ).parquet(path)
-        tmp = self._bucket_meta_path(table) + f".tmp-{uuid.uuid4().hex[:8]}"
-        with open(tmp, "w", encoding="utf-8") as f:
-            json.dump({"n_buckets": n_buckets, "key": keys}, f)
-        os.replace(tmp, self._bucket_meta_path(table))
-        self._commit(table, new)
-        return new
-
+    # ---------------------------------------------------------- merge (K2)
     def merge(
         self,
         df: DataFrame,
@@ -425,97 +377,14 @@ class LakeCatalog:
     ) -> int:
         """MERGE INTO: upsert by key, new rows win (K2 semantics,
         replacing the reference's first-wins file dedup mod.rs:177-208).
-
-        Bucket-wise when the table has a bucketed layout
-        (``write_bucketed``): only the buckets containing incoming keys
-        are rewritten — one Spark job over O(affected buckets) of old
-        data — and every untouched bucket's files are HARDLINKED from
-        the previous snapshot (zero copy, the parquet analog of Iceberg
-        reusing unchanged manifests). A 2-bucket upsert against a
-        10^10-row 64-bucket cache reads/writes 2/64ths of it.
-        Falls back to the O(table) rewrite for unbucketed tables."""
+        One keyed rewrite: the current snapshot minus the incoming keys
+        (left-anti), plus the incoming rows, written as a new snapshot."""
         keys = [key] if isinstance(key, str) else list(key)
-        meta = self.bucket_meta(table)
-        if meta is not None and self.exists(table):
-            # defense-in-depth vs stale metadata: the bucket-wise path
-            # is only valid if the CURRENT snapshot really has the
-            # layout (at least one _bucket=* dir)
-            snap = self.snapshot_path(table)
-            has_layout = any(
-                e.is_dir() and e.name.startswith(f"{BUCKET_COL}=")
-                for e in os.scandir(snap)
-            )
-            if not has_layout:
-                meta = None
-        if meta is None or not self.exists(table) or meta.get("key") != keys:
-            if self.exists(table):
-                old = self.read(table)
-                keep = old.join(
-                    df.select(*keys).dropDuplicates(keys), keys, "left_anti"
-                )
-                merged = keep.unionByName(df.dropDuplicates(keys))
-            else:
-                merged = df.dropDuplicates(keys)
-            return self.write(merged, table, bucket_hint=bucket_hint)
-
-        n_buckets = int(meta["n_buckets"])
-        incoming = df.dropDuplicates(keys).withColumn(
-            BUCKET_COL, self._bucket_expr(keys, n_buckets)
-        )
-        # affected buckets: ≤ n_buckets values — driver-safe collect
-        affected = sorted(
-            r[0] for r in incoming.select(BUCKET_COL).distinct().collect()
-        )
-        cur = self.version(table)
-        old_snap = self.snapshot_path(table, cur)
-        new = cur + 1
-        new_snap = os.path.join(self._tdir(table), f"snap-{new}")
-        if os.path.isdir(new_snap):
-            # uncommitted leftover (crashed merge, or a rollback left a
-            # higher snap dir behind): the pointer still references cur,
-            # so the dir is garbage. It MUST be cleared here — the
-            # empty-``affected`` path below runs no overwrite job, and
-            # the hardlink loop would otherwise commit the stale files
-            # alongside the old buckets' (silent duplicate keys).
-            shutil.rmtree(new_snap)
-        os.makedirs(new_snap, exist_ok=True)
-
-        if affected:
-            old_paths = [
-                p
-                for b in affected
-                if os.path.isdir(p := os.path.join(old_snap, f"{BUCKET_COL}={b}"))
-            ]
-            if old_paths:
-                old_rows = self.spark.read.option("basePath", old_snap).parquet(
-                    *old_paths
-                )
-                keep = old_rows.join(
-                    incoming.select(*keys).dropDuplicates(keys), keys, "left_anti"
-                )
-                merged = keep.unionByName(incoming.select(*old_rows.columns))
-            else:
-                merged = incoming
-            merged.repartition(F.col(BUCKET_COL)).write.mode(
-                "overwrite"
-            ).partitionBy(BUCKET_COL).parquet(new_snap)
-
-        # untouched buckets: hardlink every file from the old snapshot
-        affected_set = {f"{BUCKET_COL}={b}" for b in affected}
-        for entry in os.scandir(old_snap):
-            if not entry.is_dir() or not entry.name.startswith(f"{BUCKET_COL}="):
-                continue
-            if entry.name in affected_set:
-                continue
-            dst_dir = os.path.join(new_snap, entry.name)
-            os.makedirs(dst_dir, exist_ok=True)
-            for f_ in os.scandir(entry.path):
-                if f_.is_file() and not f_.name.startswith("_"):
-                    dst = os.path.join(dst_dir, f_.name)
-                    if not os.path.exists(dst):
-                        os.link(f_.path, dst)
-        self._commit(table, new)
-        return new
+        merged = df.dropDuplicates(keys)
+        if self.exists(table):
+            keep = self.read(table).join(merged.select(*keys), keys, "left_anti")
+            merged = keep.unionByName(merged)
+        return self.write(merged, table, bucket_hint=bucket_hint)
 
     # ------------------------------------------------- slice-tree compaction
     def _compact_meta_path(self, table: str) -> str:
@@ -539,17 +408,14 @@ class LakeCatalog:
         table: str,
         slice_col: str,
         key: str | list[str],
-        n_buckets: int = 64,
         upto: int | None = None,
     ) -> int | None:
         """Fold committed slices ≤ ``upto`` (default: all committed) into
-        ONE bucketed base snapshot (VERDICT r3 #10): a months-long crawl
-        otherwise grows one ``<slice_col>=r`` directory per round forever,
-        and every ``read_slices`` pays the ever-longer file listing.
-        Incremental — a second compaction bucket-wise-MERGEs the new
-        slices into the existing snapshot (only affected buckets rewritten,
-        untouched ones hardlinked), so each round's rows are rewritten
-        O(1) times, not O(rounds).
+        ONE base snapshot (VERDICT r3 #10): a months-long crawl otherwise
+        grows one ``<slice_col>=r`` directory per round forever, and
+        every ``read_slices`` pays the ever-longer file listing. Each
+        compaction is one keyed ``merge`` of the new slices into the
+        base (a plain write when there is none yet).
 
         If the same key appears in several slices, the HIGHEST slice
         value wins (K2 new-rows-win, matching ``merge``); the slice
@@ -559,7 +425,10 @@ class LakeCatalog:
         Crash-safe ordering: snapshot + floor commit BEFORE slice
         deletion; ``read_slices`` excludes slices at/below the floor, so
         a crash between the two steps never double-counts, and replaying
-        the compaction just re-deletes."""
+        the compaction just re-deletes.
+
+        Lakes compacted by earlier code (a base laid out in
+        ``snap-V/_bucket=k`` dirs) are not migrated."""
         keys = [key] if isinstance(key, str) else list(key)
         committed = sorted(
             v
@@ -593,10 +462,7 @@ class LakeCatalog:
             .filter(F.col("_rn") == 1)
             .drop("_rn")
         )
-        if self.exists(table):
-            self.merge(df, table, key=keys)
-        else:
-            self.write_bucketed(df, table, key=keys, n_buckets=n_buckets)
+        self.merge(df, table, key=keys)
         tmp = self._compact_meta_path(table) + f".tmp-{uuid.uuid4().hex[:8]}"
         with open(tmp, "w", encoding="utf-8") as f:
             json.dump({"slice_col": slice_col, "upto": hi}, f)

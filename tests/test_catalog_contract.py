@@ -54,20 +54,18 @@ class TestCatalogContract:
 
 
 def test_merge_after_unbucketed_rewrite_keeps_rows(spark, tmp_path):
-    """Review regression (r3): a plain write (or a merge that fell back
-    to the full rewrite, e.g. on key mismatch) produces an UNBUCKETED
-    snapshot; stale _buckets metadata must not make the next keyed
-    merge treat it as bucket-laid-out — that path found zero bucket
-    dirs and silently dropped every existing row."""
+    """Review regression (r3): merges under different keys over one
+    snapshot keep every prior row — an earlier keyed-merge path found no
+    layout dirs in a rewritten snapshot and silently dropped them all."""
     from netrunner_spark.tables import LakeCatalog
 
     cat = LakeCatalog(spark, str(tmp_path / "lake"))
     a = spark.createDataFrame([(1, "a"), (2, "b")], "k long, v string")
-    cat.write_bucketed(a, "t", key="k", n_buckets=4)
-    # key-mismatched merge -> fallback full rewrite (unbucketed snapshot)
+    cat.write(a, "t")
+    # merge keyed on (k, v): (2, "B") is a new key, (2, "b") stays
     b = spark.createDataFrame([(2, "B"), (3, "c")], "k long, v string")
     cat.merge(b, "t", key=["k", "v"])
-    # keyed merge on the now-unbucketed snapshot must keep prior rows
+    # keyed merge on k must keep prior rows
     c = spark.createDataFrame([(4, "d")], "k long, v string")
     cat.merge(c, "t", key="k")
     got = {(r["k"], r["v"]) for r in cat.read("t").collect()}

@@ -1,7 +1,10 @@
 """Slice-tree compaction contract (VERDICT r3 #10): a long crawl grows
 one cache slice dir per round; ``compact_slices`` folds the committed
-slices into ONE bucketed base snapshot without changing what any reader
-sees, and W4 resume keeps working from the compacted state."""
+slices into ONE base snapshot (a keyed merge, highest round wins)
+without changing what any reader sees, and W4 resume keeps working from
+the compacted state."""
+
+import os
 
 import pytest
 from pyspark.sql import functions as F
@@ -53,12 +56,14 @@ def test_compaction_preserves_rows_and_resume(spark, webs, tmp_path):
     round_before = job.current_round()
     metrics_before = _rows(job.metrics_df(), "host", "round", "n_urls")
 
-    hi = job.compact_cache(n_buckets=4)
+    hi = job.compact_cache()
     assert hi == round_before - 1
 
     # slice dirs are gone; the base snapshot carries everything
     assert cat._slice_values("cache", "fetched_round") == []
-    assert cat.exists("cache") and cat.bucket_meta("cache")["key"] == ["url_hash"]
+    assert cat.exists("cache") and cat.compacted_upto("cache", "fetched_round") == hi
+    # one plain snapshot, no layout dirs
+    assert not any(e.is_dir() for e in os.scandir(cat.snapshot_path("cache")))
     after = _rows(cat.read_slices("cache"), "url", "status", "fetched_round")
     assert after == before  # rows preserved, per-row round lineage intact
     assert _rows(job.metrics_df(), "host", "round", "n_urls") == metrics_before
@@ -79,7 +84,7 @@ def test_crawl_continues_after_compaction_and_recompacts(spark, webs, tmp_path):
     web, robots, fetcher = webs(3, 12)
     cat, cfg, job = _crawl(spark, tmp_path, web, robots, fetcher)
     seeds = {r["url"] for r in cat.read_slices("cache").select("url").collect()}
-    floor = job.compact_cache(n_buckets=4)
+    floor = job.compact_cache()
 
     # enqueue a second wave (a later gen_web page range), drain it: new
     # slices land ABOVE the floor and read_slices unions base + tail
@@ -99,8 +104,8 @@ def test_crawl_continues_after_compaction_and_recompacts(spark, webs, tmp_path):
     assert combined.count() == combined.select("url").distinct().count()
     n_combined = combined.count()
 
-    # incremental second compaction: bucket-wise merge of the new slices
-    hi2 = job.compact_cache(n_buckets=4)
+    # incremental second compaction: keyed merge of the new slices
+    hi2 = job.compact_cache()
     assert hi2 is not None and hi2 > floor
     assert cat._slice_values("cache", "fetched_round") == []
     assert cat.read_slices("cache").count() == n_combined
@@ -120,7 +125,7 @@ def test_recompaction_crash_before_floor_update_no_double_count(
     web, robots, fetcher = webs(2, 10)
     cat, _cfg, job = _crawl(spark, tmp_path, web, robots, fetcher)
     seeds = {r["url"] for r in cat.read_slices("cache").select("url").collect()}
-    floor = job.compact_cache(n_buckets=4)
+    floor = job.compact_cache()
     assert floor is not None
 
     wave2 = gen_web(spark, 2, 14).filter(~F.col("url").isin(list(seeds)))
@@ -145,7 +150,7 @@ def test_recompaction_crash_before_floor_update_no_double_count(
 
     monkeypatch.setattr(_os, "replace", crashing_replace)
     try:
-        job.compact_cache(n_buckets=4)
+        job.compact_cache()
         raise AssertionError("injected crash did not fire")
     except RuntimeError:
         pass
@@ -160,7 +165,7 @@ def test_recompaction_crash_before_floor_update_no_double_count(
     assert combined.select("url").distinct().count() == n_combined
 
     # replaying the compaction heals: floor advances, slices deleted
-    hi2 = job.compact_cache(n_buckets=4)
+    hi2 = job.compact_cache()
     assert hi2 is not None and hi2 > floor
     assert cat._slice_values("cache", "fetched_round") == []
     assert cat.read_slices("cache").count() == n_combined
@@ -174,12 +179,35 @@ def test_read_slices_excludes_sub_floor_stragglers(spark, webs, tmp_path):
     # materialize round 0 BEFORE compaction deletes its files
     first = cat.read_slice("cache", "fetched_round", 0).localCheckpoint()
     n = cat.read_slices("cache").count()
-    job.compact_cache(n_buckets=4)
+    job.compact_cache()
     # resurrect round 0's slice as a crash would leave it
     cat.write_slice(
         first.withColumn("fetched_round", F.lit(0)), "cache", "fetched_round", 0
     )
     assert cat.read_slices("cache").count() == n
     # and the replayed compaction just re-deletes (nothing above floor)
-    assert job.compact_cache(n_buckets=4) is None
+    assert job.compact_cache() is None
     assert cat._slice_values("cache", "fetched_round") == []
+
+
+def test_recompaction_keeps_highest_round_for_a_base_key(spark, webs, tmp_path):
+    """A key already in the compacted base that a newer slice carries
+    again comes out of the next compaction once, with the newer round
+    (highest slice wins across the base and the tail)."""
+    web, robots, fetcher = webs(2, 10)
+    cat, _cfg, job = _crawl(spark, tmp_path, web, robots, fetcher)
+    floor = job.compact_cache()
+    assert floor is not None
+    key, newer = cat.read("cache").agg(F.min("url_hash")).first()[0], floor + 1
+    cat.write_slice(
+        cat.read("cache").filter(F.col("url_hash") == key).withColumn(
+            "attempts", F.lit(7)
+        ),
+        "cache", "fetched_round", newer,
+    )
+    assert job.compact_cache() == newer
+    got = cat.read_slices("cache").filter(F.col("url_hash") == key).collect()
+    assert [(r["fetched_round"], r["attempts"]) for r in got] == [(newer, 7)]
+    assert cat.read_slices("cache").count() == (
+        cat.read_slices("cache").select("url_hash").distinct().count()
+    )

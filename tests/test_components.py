@@ -88,62 +88,6 @@ class TestLakeCatalog:
         rows = {(r["k"], r["v"]) for r in cat.read("t").collect()}
         assert rows == {(1, "a"), (2, "B"), (3, "c")}  # new wins
 
-    def test_bucketed_merge_touches_only_affected_buckets(self, spark, tmp_path):
-        """K2 MERGE at scale: a small upsert against a 64-bucket table
-        rewrites ONLY the buckets containing incoming keys; every other
-        bucket's files are hardlinked (same inode) from the previous
-        snapshot — O(affected buckets), not O(table)."""
-        import os
-
-        from netrunner_spark.tables import BUCKET_COL
-
-        cat = LakeCatalog(spark, str(tmp_path))
-        base = spark.range(2000).select(
-            F.col("id").alias("k"), F.concat(F.lit("v"), F.col("id")).alias("v")
-        )
-        cat.write_bucketed(base, "t", key="k", n_buckets=64)
-        old_snap = cat.snapshot_path("t")
-
-        # incoming rows confined to the buckets of keys {7, 1234, 999999}
-        upd = spark.createDataFrame(
-            [(7, "NEW7"), (1234, "NEW1234"), (999999, "fresh")],
-            "k long, v string",
-        )
-        n_upd_buckets = upd.select(
-            F.pmod(F.xxhash64("k"), F.lit(64)).alias("b")
-        ).distinct().count()
-        cat.merge(upd, "t", key="k")
-        new_snap = cat.snapshot_path("t")
-        assert new_snap != old_snap
-
-        def inodes(snap):
-            out = {}
-            for d in os.scandir(snap):
-                if d.is_dir() and d.name.startswith(f"{BUCKET_COL}="):
-                    for f in os.scandir(d.path):
-                        if f.is_file() and not f.name.startswith("_"):
-                            out.setdefault(d.name, set()).add(f.stat().st_ino)
-            return out
-
-        old_i, new_i = inodes(old_snap), inodes(new_snap)
-        rewritten = {
-            b for b, ino in new_i.items() if ino - set().union(*old_i.values())
-        }
-        # only the incoming keys' buckets have freshly-written files
-        assert len(rewritten) <= n_upd_buckets
-        # every untouched bucket is a hardlink of the old snapshot's files
-        for b, ino in new_i.items():
-            if b not in rewritten and b in old_i:
-                assert ino == old_i[b]
-
-        # semantics identical to the naive merge (new wins, rest kept)
-        rows = {(r["k"], r["v"]) for r in cat.read("t").collect()}
-        assert rows == {
-            (i, f"v{i}") for i in range(2000) if i not in (7, 1234)
-        } | {(7, "NEW7"), (1234, "NEW1234"), (999999, "fresh")}
-        # layout column never leaks to readers
-        assert BUCKET_COL not in cat.read("t").columns
-
     def test_slices_idempotent_replay(self, spark, tmp_path):
         cat = LakeCatalog(spark, str(tmp_path))
         df = spark.createDataFrame([(1, 10)], "k long, r int")

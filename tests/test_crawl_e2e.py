@@ -663,6 +663,32 @@ def test_init_after_streaming_enqueue_keeps_streamed_keys_in_bloom(
     assert tagged.filter(~F.col("maybe_seen")).count() == 0
 
 
+def test_init_after_streaming_enqueue_keeps_host_budget(
+    spark, world, fetcher, tmp_path_factory
+):
+    """``init_frontier`` after a streaming enqueue schedules after the
+    streamed rounds: scheduling both from round 0 put two budgets' worth
+    of one host's URLs into each overlapping round."""
+    cfg = CrawlConfig(round_seconds=1.0, n_bloom_shards=4)  # budget 2
+    cat = LakeCatalog(spark, str(tmp_path_factory.mktemp("lake_stream_budget")))
+    job = CrawlJob(spark, cat, fetcher, world["robots"], cfg)
+    # host1 has no crawl-delay, so its budget is round_seconds * rps = 2
+    keyed = world["web"].filter(F.col("host") == "host1.test").select(
+        "url", "host", F.xxhash64("url").alias("url_hash")
+    )
+    urls = [f"https://host1.test/{p}" for p in
+            ("docs/0", "blog/1", "wiki/2", "docs/3", "blog/4", "docs/6")]
+    job.enqueue_frontier(
+        keyed.filter(F.col("url").isin(urls[:3])).withColumn("depth", F.lit(0))
+    )
+    job.init_frontier(keyed.filter(F.col("url").isin(urls[3:])))
+    per_round = (
+        job._scheduled().groupBy("host", "sched_round").count().collect()
+    )
+    assert sum(r["count"] for r in per_round) == 6
+    assert max(r["count"] for r in per_round) <= 2
+
+
 def test_archive_fallback_counts_missing_images_as_failures(
     spark, world, colocated_fetcher, tmp_path_factory
 ):

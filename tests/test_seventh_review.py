@@ -9,15 +9,14 @@ from netrunner_spark.tables import LakeCatalog
 
 def test_merge_clears_stale_uncommitted_snapshot(spark, tmp_path):
     """A stale snap-N dir (crashed merge / rollback leftover) must not
-    leak its files into the next merge's commit. Old bug: the
-    empty-``affected`` path ran no overwrite job, so the hardlink loop
-    committed the stale files alongside the old buckets' — silent
-    duplicate keys."""
+    leak its files into the next merge's commit: an earlier merge path
+    ran no overwrite job for an empty upsert and committed the stale
+    files alongside the old ones — silent duplicate keys."""
     cat = LakeCatalog(spark, str(tmp_path / "lake"))
     base = spark.createDataFrame(
         [(1, "a"), (2, "b"), (3, "c")], "k long, v string"
     )
-    cat.write_bucketed(base, "t", key="k", n_buckets=4)        # snap-1
+    cat.write(base, "t")                                       # snap-1
     upd = spark.createDataFrame([(2, "B!")], "k long, v string")
     cat.merge(upd, "t", key="k")                               # snap-2
     cat.rollback("t", 1)                                       # snap-2 now stale
@@ -25,11 +24,11 @@ def test_merge_clears_stale_uncommitted_snapshot(spark, tmp_path):
     cat.merge(empty, "t", key="k")                             # re-commits v2
     rows = {(r["k"], r["v"]) for r in cat.read("t").collect()}
     assert rows == {(1, "a"), (2, "b"), (3, "c")}
-    # no duplicate keys in any bucket
+    # no duplicate keys
     assert cat.read("t").count() == cat.read("t").select("k").distinct().count()
 
-    # same window with a NON-empty merge whose affected set misses the
-    # stale bucket: stale files must still be cleared
+    # same window with a NON-empty merge of another key: stale files
+    # must still be cleared
     cat.merge(upd, "t", key="k")                               # snap-2 again
     cat.rollback("t", 1)
     other = spark.createDataFrame([(1, "A!")], "k long, v string")
